@@ -1,6 +1,5 @@
 package graft.api
 
-import graft.canon.Identity
 import graft.ingest.IngestionPipeline
 import graft.state.IngestionStateStore
 import java.net.InetSocketAddress
@@ -33,9 +32,7 @@ final class IngestController(spark: SparkSession, store: IngestionStateStore) {
     // evaluate the by-name clock ONCE: the returned ingestion_id and the id
     // the pipeline runs under must come from the same epoch-millis version
     val now = nowMillis
-    val fileId = Identity.fileId(request.filePath, request.fileType)
-    val version = Identity.version(request.reIngestion, now)
-    val ingestionId = Identity.ingestionId(fileId, version)
+    val ingestionId = IngestionPipeline.ingestionId(request, now)
     outcomes.put(ingestionId, "RUNNING")
     pool.submit(new Runnable {
       override def run(): Unit =

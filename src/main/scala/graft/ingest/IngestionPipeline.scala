@@ -126,16 +126,21 @@ object IngestionPipeline {
       .orderBy(col("chunk_number"))
   }
 
+  /** The id a batch ingestion of `request` runs and persists under — the
+    * one derivation both [[run]] and the API controller use. Identity
+    * uses the NORMALIZED file type — dispatch lowercases it, so "JSON" and
+    * "json" runs over the same file must resume the same ingestion rather
+    * than silently minting a fresh id and re-sending all. */
+  def ingestionId(request: IngestRequest, nowMillis: => Long): String =
+    Identity.ingestionId(
+      Identity.fileId(request.filePath, request.fileType.toLowerCase),
+      Identity.version(request.reIngestion, nowMillis))
+
   /** Run one ingestion to completion (or terminal failure). Resumable: a
     * rerun with reIngestion=false continues after the last ACKed chunk. */
   def run(spark: SparkSession, request: IngestRequest, store: IngestionStateStore,
       nowMillis: => Long = System.currentTimeMillis()): Result = {
-    // identity uses the NORMALIZED file type — dispatch lowercases it, so
-    // "JSON" and "json" runs over the same file must resume the same
-    // ingestion rather than silently minting a fresh id and re-sending all
-    val fileId = Identity.fileId(request.filePath, request.fileType.toLowerCase)
-    val version = Identity.version(request.reIngestion, nowMillis)
-    val ingestionId = Identity.ingestionId(fileId, version)
+    val ingestionId = this.ingestionId(request, nowMillis)
 
     val lastAcked = store.lastChunk(ingestionId) // -1 on fresh start
     var totalRecords = store.totalRecords(ingestionId)

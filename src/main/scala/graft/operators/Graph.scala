@@ -67,6 +67,39 @@ object Graph {
       _ => pinRegime(approxKeyCount(pinned, keyCol), conf))
   }
 
+  /** The PageRank family's loop invariants over `edges`, built once per
+    * call: the distinct edge list `e`, its `outdeg` per src, and the
+    * OUTDEG-WEIGHTED edge table `e ⋈ outdeg`, materialized (round-12
+    * shave: the join used to re-execute as a second edge-sized hash join
+    * inside every power step; shuffle-file reuse amortized its exchanges
+    * but not the join itself). Round 13: in the both-sides-large regime
+    * the weighted table also ADVERTISES its hash(src) layout + src sort
+    * order (GraftSql.pinHashPartitioned — a plain localCheckpoint
+    * republishes as UnknownPartitioning under AQE), so every power step
+    * plans with ZERO exchange and ZERO sort on the edge side. The layout
+    * is REGIME-ADAPTIVE, measured both ways at sf0.1: when the node-sized
+    * rank vector broadcasts, the edge side never exchanges at all and the
+    * up-front edge exchange+sort is pure overhead (+35% wall); when ranks
+    * exceed the broadcast threshold (the 100 TB regime), SMJ re-sorts the
+    * edge side EVERY iteration without it. Decided by the signal Spark's
+    * own planner uses: estimated rank-vector bytes vs
+    * autoBroadcastJoinThreshold, counting |src| — the node domain under
+    * the symmetric contract, a close lower bound for directed edges. */
+  private def weightedEdges(edges: DataFrame, inputDistinct: Boolean)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val eBase = if (inputDistinct) edges.select(col("src"), col("dst"))
+      else edges.select(col("src"), col("dst")).distinct()
+    val e = if (inputDistinct) eBase else eBase.localCheckpoint()
+    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
+    val conf = edges.sparkSession.sessionState.conf
+    val ewBase = e.join(outdeg, Seq("src"))
+    val ew = if (cachedPinRegime(eBase, e, "src", conf))
+      org.apache.spark.sql.GraftSql
+        .pinHashPartitioned(ewBase, Seq("src"), conf.numShufflePartitions)
+      else ewBase.localCheckpoint()
+    (e, outdeg, ew)
+  }
+
   // ==== q123: PageRank by power iteration ===================================
   //
   // r' = (1−d)/N + d·Σ_{u→v} r_u/outdeg_u, a fixed number of iterations.
@@ -80,34 +113,29 @@ object Graph {
   // at a fixed partitioning so every iteration reuses the same exchange —
   // Spark already reuses the shuffle files across the loop here.
 
-  /** Fixed-iteration PageRank over SYMMETRIC (src, dst) edges — supply
-    * both directions for an undirected graph. Symmetry is the operator's
-    * declared contract (all three callers — q123, q211, q212's kernel —
-    * pass symmetric unions) and round 16 leans on it twice: the node
-    * domain is read off the outdeg aggregation (every node appears as a
-    * src — the same fact the round-13 pin-regime signal already used),
-    * and every node has an incoming edge, so the per-iteration
-    * contribution covers ALL nodes and the old nodes-LEFT-JOIN-contrib
-    * step was an identity — both the per-call union+distinct over the
-    * edge list and one node-domain join + broadcast PER ITERATION are
-    * gone (guide §2.4); the computed recurrence is term-for-term
-    * identical, so ranks are bit-identical.
+  /** Fixed-iteration PageRank over SYMMETRIC (src, dst) edges.
+    *
+    * Precondition, unchecked: for every (u, v) row of `edges`, (v, u) is
+    * also a row — supply both directions for an undirected graph. Both
+    * query callers (q123, q211) pass symmetric unions. On a one-way
+    * edge list the ranks come out WRONG WITHOUT AN ERROR:
+    * nodes with no out-edge are missing from the node domain and nodes
+    * with no in-edge drop out after the first step.
+    *
+    * Round 16 leans on the contract twice: the node domain is read off
+    * the outdeg aggregation (every node appears as a src — the same fact
+    * the round-13 pin-regime signal already used), and every node has an
+    * incoming edge, so the per-iteration contribution covers ALL nodes
+    * and the old nodes-LEFT-JOIN-contrib step was an identity — both the
+    * per-call union+distinct over the edge list and one node-domain join
+    * + broadcast PER ITERATION are gone (guide §2.4); the computed
+    * recurrence is term-for-term identical, so ranks are bit-identical.
     * `inputDistinct = true` declares the edge list already deduplicated
     * AND materialized (a pinned [[graft.EdgePin]] layout): the per-call
     * dedup exchange and its checkpoint copy are then skipped — round-15
     * optimization; the computed result is identical either way. */
-  /** `prebuiltEw`: a session-pinned materialization of the loop-invariant
-    * e⋈outdeg table (round 16 — the [[graft.EdgePin]] pattern extended to
-    * the outdeg-weighted layout q123 and q212 both derive from the same
-    * pinned purchase pairs; its build cost is disclosed in the bench's
-    * `edgepin` field). Used as-is in the broadcast regime; in the
-    * both-sides-large regime the hash-advertised per-call pin is rebuilt
-    * FROM it (one exchange over pinned blocks instead of re-running the
-    * join). Must be byte-identical to e⋈outdeg of `edges` — callers pass
-    * a memoized copy of the same derivation, so results are unchanged. */
-  def pageRank(edges: DataFrame, iterations: Int = 5,
-      damping: Double = 0.85, inputDistinct: Boolean = false,
-      prebuiltEw: Option[DataFrame] = None): DataFrame = {
+  def symmetricPageRank(edges: DataFrame, iterations: Int = 5,
+      damping: Double = 0.85, inputDistinct: Boolean = false): DataFrame = {
     // Lineage discipline, measured both ways: a SHORT chain (≤ LineageEvery
     // iterations) must stay ONE query — Spark then computes the edge
     // distinct/outdeg shuffles once and reuses the shuffle files across
@@ -122,37 +150,7 @@ object Graph {
     val LineageEvery = 8
     val longRun = iterations > LineageEvery
     def pin(df: DataFrame): DataFrame = if (longRun) df.localCheckpoint() else df
-    val eBase = if (inputDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    val e = if (inputDistinct) eBase else eBase.localCheckpoint()
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // the loop invariant is the OUTDEG-WEIGHTED edge table — materialize
-    // the e⋈outdeg join ONCE (round-12 shave: it used to re-execute as a
-    // second edge-sized hash join inside every power step; shuffle-file
-    // reuse amortized its exchanges but not the join itself). Round 13:
-    // in the both-sides-large regime the pin also ADVERTISES its
-    // hash(src) layout + src sort order (GraftSql.pinHashPartitioned —
-    // a plain localCheckpoint republishes as UnknownPartitioning under
-    // AQE), so every power step plans with ZERO exchange and ZERO sort
-    // on the edge side. The layout pin is REGIME-ADAPTIVE, measured both
-    // ways at sf0.1: when the node-sized rank vector broadcasts, the
-    // edge side never exchanges at all and the pin's up-front edge
-    // exchange+sort is pure overhead (+35% wall); when ranks exceed the
-    // broadcast threshold (the 100 TB regime), SMJ re-sorts the edge
-    // side EVERY iteration without the pin. Decide by the same signal
-    // Spark's own planner uses: estimated rank-vector bytes vs
-    // autoBroadcastJoinThreshold. Symmetric-edge contract ⇒ every node
-    // appears as a src, so |outdeg| counts the node domain.
-    val conf = edges.sparkSession.sessionState.conf
-    val ewBase = e.join(outdeg, Seq("src"))
-    val ew = (prebuiltEw, cachedPinRegime(eBase, e, "src", conf)) match {
-      case (Some(p), false) => p
-      case (Some(p), true) => org.apache.spark.sql.GraftSql
-        .pinHashPartitioned(p, Seq("src"), conf.numShufflePartitions)
-      case (None, true) => org.apache.spark.sql.GraftSql
-        .pinHashPartitioned(ewBase, Seq("src"), conf.numShufflePartitions)
-      case (None, false) => ewBase.localCheckpoint()
-    }
+    val (_, outdeg, ew) = weightedEdges(edges, inputDistinct)
     // symmetric contract: node domain == outdeg keys (no union+distinct)
     val nodes = pin(outdeg.select(col("src").as("node")))
     val nRow = broadcast(nodes.agg(count(lit(1)).as("n")))
@@ -214,21 +212,6 @@ object Graph {
       .union(pairs.select(col("p").as("src"), col("c").as("dst")))
   }
 
-  /** The outdeg-weighted symmetric purchase edges (e ⋈ outdeg) — the
-    * PageRank-family loop invariant, pinned once per corpus dir
-    * (round 16): q123 and q212 each rebuilt + checkpointed this exact
-    * join from the pinned pairs on EVERY call (once per bench iteration
-    * per query). Same derivation byte-for-byte as the per-call build the
-    * kernels would do, so ranks are unchanged; build cost is disclosed
-    * via the bench `edgepin` field and the SPARK_GRAFT_EDGEPIN=off
-    * kill-switch restores per-call builds. */
-  private def custPartEwSym(s: SparkSession, dir: String): DataFrame =
-    graft.EdgePin.memo(s, dir, "custpart_ew_sym") {
-      val e = custPartEdges(s, dir).select(col("src"), col("dst"))
-      val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-      e.join(outdeg, Seq("src"))
-    }
-
   /** The ⅓-sliced part co-order graph (a, b share an order, a ≠ b),
     * DISTINCT, symmetric — pinned once per corpus dir:
     * q134/q153/q185/q207/q209/q231/q277/q312/q334 share one self-join.
@@ -258,8 +241,8 @@ object Graph {
       .select(col("src").as("a"), col("dst").as("b"))
 
   private def q123(s: SparkSession, dir: String): DataFrame =
-    pageRank(custPartEdges(s, dir), iterations = 5, inputDistinct = true,
-        prebuiltEw = Some(custPartEwSym(s, dir)))
+    symmetricPageRank(custPartEdges(s, dir), iterations = 5,
+        inputDistinct = true)
       .select(col("node"), QueryDef.dec4(col("rank_scaled")).as("rank_scaled"))
       .orderBy(col("node"))
 
@@ -316,8 +299,7 @@ object Graph {
     * node's rank (sums to ~1 over the graph). */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iterations: Int = 5, damping: Double = 0.85,
-      inputDistinct: Boolean = false,
-      prebuiltEw: Option[DataFrame] = None): DataFrame = {
+      inputDistinct: Boolean = false): DataFrame = {
     // Unlike q123 (whose per-iteration invariants are bare aggregation
     // subtrees that ride shuffle-file reuse), the restart vector is a
     // three-way join rebuilt from base scans — appearing once per
@@ -325,31 +307,11 @@ object Graph {
     // each step (measured 9× q123's time at sf0.1). The invariants are
     // node/edge-domain, so pin them ONCE up front; the rank chain itself
     // stays lazy (5 joins deep — no truncation needed).
-    val eBase = if (inputDistinct) edges.select(col("src"), col("dst"))
-      else edges.select(col("src"), col("dst")).distinct()
-    val e = if (inputDistinct) eBase else eBase.localCheckpoint()
-    // outdeg-weighted edges materialized once (the q123 round-12 shave);
-    // in the both-sides-large regime the pin also advertises hash(src) +
-    // sort order so no power step re-exchanges or re-sorts the edge side
-    // (regime decision = q123's broadcast-threshold signal)
-    val conf = edges.sparkSession.sessionState.conf
-    val outdeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val ewBase = e.join(outdeg, Seq("src"))
-    // prebuiltEw: the session-pinned e⋈outdeg layout (see pageRank) —
-    // per-call rebuild + checkpoint skipped in the broadcast regime, and
-    // the pin-regime hash layout rebuilds from pinned blocks
-    val ew = (prebuiltEw, cachedPinRegime(eBase, e, "src", conf)) match {
-      case (Some(p), false) => p
-      case (Some(p), true) => org.apache.spark.sql.GraftSql
-        .pinHashPartitioned(p, Seq("src"), conf.numShufflePartitions)
-      case (None, true) => org.apache.spark.sql.GraftSql
-        .pinHashPartitioned(ewBase, Seq("src"), conf.numShufflePartitions)
-      case (None, false) => ewBase.localCheckpoint()
-    }
-    // Round-16 note: deriving nodes from outdeg keys (the pageRank
+    val (e, _, ew) = weightedEdges(edges, inputDistinct)
+    // Round-16 note: deriving nodes from outdeg keys (the PageRank
     // restructure) was tried here and backed out — repeated A/B at sf0.1
     // was INCONCLUSIVE under co-tenant noise (q212 rdd min ranged
-    // 4.5–6.4 s across identical-code runs), and unlike pageRank the
+    // 4.5–6.4 s across identical-code runs), and unlike PageRank the
     // change removes no per-iteration operator here (the restart vector
     // is checkpointed once up front either way; only the one-off
     // union+distinct vs groupBy trade differs). Kept the round-15 shape
@@ -388,7 +350,7 @@ object Graph {
       .select(concat(lit("c"), col("o_custkey")).as("node"))
       .where(col("o_custkey") % 100 === 0).distinct()
     personalizedPageRank(custPartEdges(s, dir), seeds, iterations = 5,
-        inputDistinct = true, prebuiltEw = Some(custPartEwSym(s, dir)))
+        inputDistinct = true)
       .select(col("node"),
         col("rank").cast(org.apache.spark.sql.types.DecimalType(38, 8))
           .as("rdec"))
@@ -818,7 +780,7 @@ object Graph {
   // aggregation — no windows, no loops.
 
   /** One row: (n_edges, r) — assortativity of `edges` (give both
-    * directions for undirected semantics, as pageRank does). */
+    * directions for undirected semantics, as symmetricPageRank does). */
   def degreeAssortativity(edges: DataFrame,
       inputDistinct: Boolean = false): DataFrame = {
     val e = if (inputDistinct) edges.select(col("src"), col("dst"))

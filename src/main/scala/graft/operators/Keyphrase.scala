@@ -106,8 +106,9 @@ object Keyphrase {
   // stopword list needed, frequency alone doesn't win, connectivity does.
   // Graph: one undirected edge per DISTINCT adjacent token pair (window
   // w = 2, the paper's default) across the corpus; ranks from the same
-  // fixed-iteration [[Graph.pageRank]] kernel as q123 (one edge join +
-  // one map-side-combined sum per power step). The graph lives on the
+  // fixed-iteration [[Graph.symmetricPageRank]] kernel as q123 (one edge
+  // join + one map-side-combined sum per power step; the pair union below
+  // is symmetric, as the kernel requires). The graph lives on the
   // VOCABULARY domain — nodes = distinct tokens, edges = distinct
   // bigrams — so the corpus-sized work is exactly one adjacent-pair
   // projection + a distinct; everything after is vocab-sized. Top-k
@@ -128,7 +129,7 @@ object Keyphrase {
     val edges = pairs
       .select(col("a").as("src"), col("b").as("dst"))
       .union(pairs.select(col("b").as("src"), col("a").as("dst")))
-    Graph.pageRank(edges, iterations)
+    Graph.symmetricPageRank(edges, iterations)
       .select(col("node").as("word"),
         col("rank_scaled").cast(org.apache.spark.sql.types.DecimalType(38, 4))
           .as("rdec"))

@@ -52,26 +52,31 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("re-ingestion via the API: the returned id is the id the run persists under") {
-    // regression: the controller's by-name clock was evaluated twice, so the
-    // returned ingestion_id and the pipeline's actual id drifted apart
+    // regressions: the controller's by-name clock was evaluated twice, so the
+    // returned ingestion_id and the pipeline's actual id drifted apart; and
+    // the controller hashed the raw file type while the run hashed the
+    // lower-cased one, so "JSON" returned an id nothing was persisted under
     val (mock, receiver, callbackUrl) = MockPimCore.serve()
     val store = IngestionStateStore.inMemory()
     val controller = new IngestController(spark, store)
     val (api, apiUrl) = IngestApiServer.serve(controller)
     try {
-      val f = Files.createTempFile("graft_api_reing", ".json")
-      Files.writeString(f, (0 until 8).map(i => s"""{"id": $i}""").mkString("[", ",", "]"))
-      val (_, body) = post(s"$apiUrl/api/ingest",
-        s"""{"file_path": "${f.toString}", "file_type": "json",
-           | "callback_url": "$callbackUrl", "chunk_size_by_records": 3,
-           | "re_ingestion": true}""".stripMargin)
-      val iid = MiniJson.parse(body).asInstanceOf[MiniJson.JObj]
-        .get("ingestion_id").collect { case MiniJson.JStr(s) => s }.get
-      controller.awaitAll()
-      assert(controller.status(iid)._1.contains("DONE"))
-      assert(store.get(iid).exists(s =>
-        s.status == IngestionState.Completed && s.totalRecords == 8),
-        s"state row missing for the RETURNED id $iid — id drift")
+      Seq("json", "JSON").foreach { fileType =>
+        val f = Files.createTempFile("graft_api_reing", ".json")
+        Files.writeString(f,
+          (0 until 8).map(i => s"""{"id": $i}""").mkString("[", ",", "]"))
+        val (_, body) = post(s"$apiUrl/api/ingest",
+          s"""{"file_path": "${f.toString}", "file_type": "$fileType",
+             | "callback_url": "$callbackUrl", "chunk_size_by_records": 3,
+             | "re_ingestion": true}""".stripMargin)
+        val iid = MiniJson.parse(body).asInstanceOf[MiniJson.JObj]
+          .get("ingestion_id").collect { case MiniJson.JStr(s) => s }.get
+        controller.awaitAll()
+        assert(controller.status(iid)._1.contains("DONE"), fileType)
+        assert(store.get(iid).exists(s =>
+          s.status == IngestionState.Completed && s.totalRecords == 8),
+          s"state row missing for the RETURNED id $iid ($fileType) — id drift")
+      }
       val _ = mock
     } finally { api.stop(0); receiver.stop(0); controller.shutdown() }
   }

@@ -89,13 +89,14 @@ class GraphPinSpec extends AnyFunSuite {
     }
   }
 
-  test("pageRank: pinned edge invariant, values match a naive recompute") {
+  test("symmetricPageRank: pinned edge invariant, values match a naive " +
+      "recompute") {
     noBroadcast {
       val edges0 = (for { s <- 0L until 30L; d <- 0L until 30L
         if (s * 3 + d) % 5 == 0 && s != d } yield (s"v$s", s"v$d"))
       val edges = (edges0 ++ edges0.map(e => (e._2, e._1)))
         .toDF("src", "dst")
-      val out = Graph.pageRank(edges, iterations = 5)
+      val out = Graph.symmetricPageRank(edges, iterations = 5)
       val es = edges0.flatMap(e => Seq(e, (e._2, e._1))).distinct
       val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct
       val outdeg = es.groupBy(_._1).map { case (k, g) => k -> g.size }

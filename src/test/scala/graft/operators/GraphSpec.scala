@@ -12,9 +12,9 @@ class GraphSpec extends AnyFunSuite {
   private def sym(pairs: (String, String)*) =
     (pairs ++ pairs.map(p => (p._2, p._1))).toDF("src", "dst")
 
-  test("pageRank: ranks sum to 1 and a hub outranks its leaves") {
+  test("symmetricPageRank: ranks sum to 1 and a hub outranks its leaves") {
     val star = sym(("hub", "a"), ("hub", "b"), ("hub", "c"))
-    val ranks = Graph.pageRank(star, iterations = 10)
+    val ranks = Graph.symmetricPageRank(star, iterations = 10)
       .select(col("node"), col("rank_scaled")).as[(String, Double)]
       .collect().toMap
     val n = ranks.size.toDouble
@@ -25,9 +25,10 @@ class GraphSpec extends AnyFunSuite {
     assert(ranks("a") == ranks("b") && ranks("b") == ranks("c"))
   }
 
-  test("pageRank: converges toward the degree distribution on a path graph") {
+  test("symmetricPageRank: converges toward the degree distribution " +
+      "on a path graph") {
     val path = sym(("a", "b"), ("b", "c"), ("c", "d"))
-    val ranks = Graph.pageRank(path, iterations = 30)
+    val ranks = Graph.symmetricPageRank(path, iterations = 30)
       .select(col("node"), col("rank_scaled")).as[(String, Double)]
       .collect().toMap
     // undirected path: interior nodes (deg 2) outrank endpoints (deg 1)
@@ -300,7 +301,7 @@ class GraphSpec extends AnyFunSuite {
     assert(ranks("a") > ranks("x"), s"seed-adjacent must win: $ranks")
     // uniform-PageRank sanity: the same graph WITHOUT personalization
     // ranks the two hubs equally (symmetry) — the seed is what breaks it
-    val uni = Graph.pageRank(g, iterations = 20)
+    val uni = Graph.symmetricPageRank(g, iterations = 20)
       .as[(String, Double)].collect().toMap
     assert(math.abs(uni("h1") - uni("h2")) < 1e-9)
   }
