@@ -7,13 +7,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SparkSessionExtensions entry point: registers the engine's native
-  * expressions as SQL functions at session build time —
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
+  * expressions as SQL functions at session build time. [[GraftSession]]
+  * installs it on every session; an outside session can take it with
+  * `.config("spark.sql.extensions", "graft.GraftExtensions")`.
   *
   * After that, plain SQL can use `canonical_json`, `simhash64`,
   * `minhash_signature`, `ngram_shingles`, and `dot_product` — the same

@@ -4,7 +4,6 @@ import graft.api.IngestRequest
 import graft.ingest.IngestionPipeline
 import graft.receiver.MockPimCore
 import graft.state.IngestionStateStore
-import org.apache.spark.sql.SparkSession
 
 /** Protocol-throughput benchmark: push an entire lineitem table through the
   * full chunk→checksum→ordered-ACK pipeline against an in-process receiver
@@ -16,15 +15,8 @@ import org.apache.spark.sql.SparkSession
 object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val chunkSize = sys.env.getOrElse("SPARK_GRAFT_CHUNK", "4000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val (mock, server, url) = MockPimCore.serve()
     try {
@@ -90,23 +82,6 @@ object IngestBench {
       sys.env.get("SPARK_GRAFT_INGEST_OUT").foreach { path =>
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
           f"""{"streams":$streams,"records":$total,"chunks":$chunksSent,"chunk_size":$chunkSize,"sec":$sec%.2f,"records_per_sec":$rps%.0f,"receiver_records":${mock.totalRecordsEver},"receiver_nacks":${mock.nackCount},"completed_handshakes":${mock.completedCount},"ordered_ack_law_per_stream":true,"per_stream":$streamDetail}""" + "\n")
-      }
-      // phase breakdown (separate warm run, AFTER the accounting checks —
-      // it re-sends the table and would double the receiver's counters)
-      if (sys.env.contains("SPARK_GRAFT_PHASES")) {
-        import org.apache.spark.sql.functions.{col, max}
-        val req2 = request.copy(reIngestion = true)
-        val tb0 = System.nanoTime()
-        val chunks = IngestionPipeline
-          .buildChunks(IngestionPipeline.scan(spark, req2), req2).cache()
-        val maxChunk = chunks.agg(max(col("chunk_number"))).collect()(0).getLong(0)
-        val tBuild = (System.nanoTime() - tb0) / 1e9
-        val td0 = System.nanoTime()
-        IngestionPipeline.deliverChunksDistributed(chunks, "bench-phases",
-          IngestionStateStore.inMemory(), url, -1L, 0L, maxChunk)
-        val tDeliver = (System.nanoTime() - td0) / 1e9
-        chunks.unpersist()
-        println(f"""{"metric":"ingest_phases","build_sec":$tBuild%.2f,"deliver_sec":$tDeliver%.2f}""")
       }
     } finally server.stop(0)
     spark.stop()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Composed-pipeline benchmark main: runs the PipelineSpec curation chain
@@ -19,15 +19,7 @@ import org.apache.spark.sql.functions._
 object PipelineBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     val stages = scala.collection.mutable.ArrayBuffer[(String, Double, Long)]()
     def timed(name: String)(body: => DataFrame): DataFrame = {
@@ -82,7 +74,7 @@ object PipelineBench {
 
     val stageJson = stages.map { case (n, s, c) =>
       s""""$n":{"sec":$s,"rows":$c}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"pipeline_total","value":$total,"unit":"sec","stages":$stageJson,"shard_tokens":$nTok,"cpus":$cpus,"sf":"$sfDir"}""")
+    println(s"""{"metric":"pipeline_total","value":$total,"unit":"sec","stages":$stageJson,"shard_tokens":$nTok,"cpus":${GraftSession.cores},"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -20,7 +20,6 @@ object Plans {
     val outDir = args(1)
     val suffix = args(2)
     val wanted = args.drop(3).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SPARK_GRAFT_PLANS_CONF="k=v;k=v" — extra session confs, e.g.
     // spark.sql.autoBroadcastJoinThreshold=-1 to dump the plan an
     // operator produces in the both-sides-large (100 TB) regime
@@ -28,15 +27,7 @@ object Plans {
       .split(";").filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2); (k, v)
       }
-    val builder = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    extra.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build(confs = extra.toSeq)
     Files.createDirectories(Paths.get(outDir))
     val qs = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => wanted.isEmpty || wanted(q._1))

@@ -110,21 +110,24 @@ object UrlOps {
       }
   }
 
-  /** The host's public suffix (the implicit `*` rule makes this total). */
-  def publicSuffix(host: Column): Column = {
-    val labels = split(host, "\\.")
-    val sl = suffixLength(host)
+  // the eTLD+1 slice arithmetic, over a host's label array and the label
+  // count `sl` of its public suffix: the last `sl` labels, and those plus
+  // one more (NULL when the host IS a public suffix)
+  private def suffixOfLabels(labels: Column, sl: Column): Column =
     concat_ws(".", slice(labels, size(labels) - sl + 1, sl))
-  }
+
+  private def registrableOfLabels(labels: Column, sl: Column): Column =
+    when(size(labels) > sl,
+      concat_ws(".", slice(labels, size(labels) - sl, sl + 1)))
+
+  /** The host's public suffix (the implicit `*` rule makes this total). */
+  def publicSuffix(host: Column): Column =
+    suffixOfLabels(split(host, "\\."), suffixLength(host))
 
   /** eTLD+1: public suffix plus one label; NULL when the host IS a
     * public suffix. */
-  def registrableDomain(host: Column): Column = {
-    val labels = split(host, "\\.")
-    val n = size(labels)
-    val sl = suffixLength(host)
-    when(n > sl, concat_ws(".", slice(labels, n - sl, sl + 1)))
-  }
+  def registrableDomain(host: Column): Column =
+    registrableOfLabels(split(host, "\\."), suffixLength(host))
 
   /** Round-16 codegen fix (VERDICT r15 item 7): the fused
     * `registrableDomain(hostOf(url))` expression re-embeds the regex host
@@ -142,11 +145,8 @@ object UrlOps {
   private def withDomainStages(df: DataFrame, url: Column): DataFrame =
     df.withColumn("__labels", split(hostOf(url), "\\."))
       .withColumn("__sl", suffixLengthOfLabels(col("__labels")))
-      .withColumn("registrable",
-        coalesce(when(size(col("__labels")) > col("__sl"),
-          concat_ws(".", slice(col("__labels"),
-            size(col("__labels")) - col("__sl"), col("__sl") + 1))),
-          lit("(none)")))
+      .withColumn("registrable", coalesce(
+        registrableOfLabels(col("__labels"), col("__sl")), lit("(none)")))
       .drop("__labels", "__sl")
 
   // ---- DuckDB twins (generated from the SAME rule lists + unroll) ---------
@@ -230,13 +230,8 @@ object UrlOps {
       .withColumn("__labels", split(col("host"), "\\."))
       .withColumn("__sl", suffixLengthOfLabels(col("__labels")))
       .select(col("doc_id"), col("url"), col("host"),
-        concat_ws(".", slice(col("__labels"),
-          size(col("__labels")) - col("__sl") + 1, col("__sl")))
-          .as("suffix"),
-        when(size(col("__labels")) > col("__sl"),
-          concat_ws(".", slice(col("__labels"),
-            size(col("__labels")) - col("__sl"), col("__sl") + 1)))
-          .as("registrable"))
+        suffixOfLabels(col("__labels"), col("__sl")).as("suffix"),
+        registrableOfLabels(col("__labels"), col("__sl")).as("registrable"))
       .orderBy(col("doc_id"))
   }
 

@@ -12,7 +12,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   *   - `lastChunk(id)` → -1 when unknown (`:36-42`), so the first chunk is 0;
   *   - `totalRecords(id)` → 0 when unknown (`:44-50`);
   *   - `ackChunk` upserts (id, last_chunk, total_records, IN_PROGRESS) and is
-  *     called ONLY after a receiver ACK (`json_reader.py:190-191`);
+  *     called ONLY after a receiver ACK (`json_reader.py:190-191`); progress
+  *     only moves forward: a `last_chunk` at or below the stored one (two
+  *     runs of one id racing) fails instead of overwriting;
   *   - `markCompleted` flips status to COMPLETED (`:63-68`).
   */
 trait IngestionStateStore {
@@ -35,9 +37,13 @@ final class InMemoryStateStore extends IngestionStateStore {
   private val meta = scala.collection.concurrent.TrieMap.empty[String, String]
   override def get(id: String): Option[IngestionState] = m.get(id)
   override def ackChunk(id: String, lastChunk: Long, total: Long): Unit =
-    m.put(id, IngestionState(id, lastChunk, total, IngestionState.InProgress))
-  override def markCompleted(id: String): Unit =
+    synchronized {
+      IngestionStateStore.requireForward(id, m.get(id), lastChunk)
+      m.put(id, IngestionState(id, lastChunk, total, IngestionState.InProgress))
+    }
+  override def markCompleted(id: String): Unit = synchronized {
     m.get(id).foreach(s => m.put(id, s.copy(status = IngestionState.Completed)))
+  }
   override def putMeta(key: String, value: String): Unit = meta.put(key, value)
   override def getMeta(key: String): Option[String] = meta.get(key)
 }
@@ -56,6 +62,8 @@ final class FileStateStore(dir: Path) extends IngestionStateStore {
   Files.createDirectories(dir)
 
   private def fileFor(id: String): Path = dir.resolve(s"$id.state")
+  private def metaFor(key: String): Path =
+    dir.resolve(s"${java.net.URLEncoder.encode(key, "UTF-8")}.meta")
 
   override def get(id: String): Option[IngestionState] = {
     val f = fileFor(id)
@@ -68,30 +76,33 @@ final class FileStateStore(dir: Path) extends IngestionStateStore {
     }
   }
 
-  private def write(id: String, s: IngestionState): Unit = {
-    val tmp = dir.resolve(s"$id.state.tmp")
-    Files.write(tmp, s"${s.lastChunk}|${s.totalRecords}|${s.status}"
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, fileFor(id), StandardCopyOption.ATOMIC_MOVE,
+  // each write stages in its own temp file, so two writers of one key never
+  // rename each other's half-written bytes into place
+  private def replace(target: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(dir, s"${target.getFileName}.", ".tmp")
+    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
+
+  private def write(id: String, s: IngestionState): Unit =
+    replace(fileFor(id), s"${s.lastChunk}|${s.totalRecords}|${s.status}")
 
   override def ackChunk(id: String, lastChunk: Long, total: Long): Unit =
-    write(id, IngestionState(id, lastChunk, total, IngestionState.InProgress))
+    synchronized {
+      IngestionStateStore.requireForward(id, get(id), lastChunk)
+      write(id, IngestionState(id, lastChunk, total, IngestionState.InProgress))
+    }
 
-  override def markCompleted(id: String): Unit =
+  override def markCompleted(id: String): Unit = synchronized {
     get(id).foreach(s => write(id, s.copy(status = IngestionState.Completed)))
-
-  override def putMeta(key: String, value: String): Unit = {
-    val safe = java.net.URLEncoder.encode(key, "UTF-8")
-    val tmp = dir.resolve(s"$safe.meta.tmp")
-    Files.write(tmp, value.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"$safe.meta"), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
+  override def putMeta(key: String, value: String): Unit =
+    replace(metaFor(key), value)
+
   override def getMeta(key: String): Option[String] = {
-    val f = dir.resolve(s"${java.net.URLEncoder.encode(key, "UTF-8")}.meta")
+    val f = metaFor(key)
     if (Files.exists(f))
       Some(new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
     else None
@@ -101,4 +112,12 @@ final class FileStateStore(dir: Path) extends IngestionStateStore {
 object IngestionStateStore {
   def file(path: String): IngestionStateStore = new FileStateStore(Paths.get(path))
   def inMemory(): IngestionStateStore = new InMemoryStateStore()
+
+  private[state] def requireForward(id: String,
+      stored: Option[IngestionState], lastChunk: Long): Unit =
+    stored.foreach { s =>
+      if (lastChunk <= s.lastChunk) throw new IllegalStateException(
+        s"ingestion $id: last_chunk may only move forward, stored " +
+          s"${s.lastChunk}, got $lastChunk")
+    }
 }

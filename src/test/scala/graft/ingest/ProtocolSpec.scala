@@ -9,6 +9,7 @@ import graft.state.IngestionStateStore
 import java.nio.file.Files
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Protocol/invariant tests (SURVEY.md §5.2 #1 and #4): the full ingest
   * pipeline over REAL HTTP against the mock receiver — chunk-exactly-once,
@@ -234,6 +235,43 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
       .exists(_.status == IngestionState.Completed))
     assert(storeB.lastChunk("unknown") == -1L) // reference default (-1)
     assert(storeB.totalRecords("unknown") == 0L)
+  }
+
+  /** Two runs of one id racing: the later ACK of the slower run must not
+    * move progress back. */
+  private def assertForwardOnly(store: IngestionStateStore): Unit = {
+    store.ackChunk("iid_fwd", 5, 60)
+    Seq(5L, 3L).foreach { stale =>
+      val e = intercept[IllegalStateException] {
+        store.ackChunk("iid_fwd", stale, 40)
+      }
+      assert(e.getMessage.contains("iid_fwd") &&
+        e.getMessage.contains("stored 5") && e.getMessage.contains(s"got $stale"))
+    }
+    assert(store.get("iid_fwd").contains(
+      IngestionState("iid_fwd", 5, 60, IngestionState.InProgress)))
+    store.ackChunk("iid_fwd", 6, 70)
+    assert(store.lastChunk("iid_fwd") == 6L)
+  }
+
+  test("in-memory state store only moves progress forward") {
+    assertForwardOnly(IngestionStateStore.inMemory())
+  }
+
+  test("file state store only moves progress forward and stages each " +
+      "write in its own temp file") {
+    val dir = Files.createTempDirectory("graft_state")
+    // another run's in-flight write holds the old shared temp names
+    Files.createDirectory(dir.resolve("iid_fwd.state.tmp"))
+    Files.createDirectory(dir.resolve("k.meta.tmp"))
+    val store = IngestionStateStore.file(dir.toString)
+    assertForwardOnly(store)
+    store.putMeta("k", "v")
+    assert(store.getMeta("k").contains("v"))
+    val names = Files.list(dir).iterator.asScala
+      .map(_.getFileName.toString).toSet
+    assert(names == Set("iid_fwd.state", "k.meta", "iid_fwd.state.tmp",
+      "k.meta.tmp"), s"left behind: $names")
   }
 
   test("nested free-form records survive the full protocol (A14 end-to-end)") {

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.TestSpark
 import org.scalatest.funsuite.AnyFunSuite
+import AllQueriesWindowShapeSpec.unpartitionedSpecs
 
 /** Round-16 plan-shape pin over EVERY declared query (VERDICT r15 item 6,
   * widening the round-15 stats-shelf pin): each executed plan's Window
@@ -34,15 +35,20 @@ class AllQueriesWindowShapeSpec extends AnyFunSuite {
     "q236_bootstrap_ci" -> "rank over b bootstrap resample sums (b rows)",
     "q241_logrank_test" -> "risk-table prefix over DISTINCT duration hours")
 
-  private val SpecRe = """windowspecdefinition\(([^)]*)""".r
+  test("a sort key that is a function call still reads as unpartitioned") {
+    val plan = "Window [row_number() windowspecdefinition(unix_micros(h#1) " +
+      "ASC NULLS FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), " +
+      "currentrow$())) AS rn#2], [unix_micros(h#1) ASC NULLS FIRST]"
+    assert(unpartitionedSpecs(plan) == Seq("unix_micros(h#1) ASC NULLS FIRST, " +
+      "specifiedwindowframe(RowFrame, unboundedpreceding$(), currentrow$())"))
+  }
 
-  private def unpartitionedSpecs(plan: String): Seq[String] =
-    SpecRe.findAllMatchIn(plan).map(_.group(1)).filter { args =>
-      // partition columns precede the sort spec; a spec whose FIRST
-      // argument already carries a sort direction has no partitioning
-      val first = args.split(",").head
-      first.contains(" ASC") || first.contains(" DESC")
-    }.toSeq.distinct
+  test("a partition key that is a function call reads as partitioned") {
+    val plan = "Window [sum(v#3) windowspecdefinition(hash(a#1), b#2 ASC " +
+      "NULLS FIRST, specifiedwindowframe(RangeFrame, unboundedpreceding$(), " +
+      "currentrow$())) AS s#4], [hash(a#1)], [b#2 ASC NULLS FIRST]"
+    assert(unpartitionedSpecs(plan).isEmpty)
+  }
 
   test("all declared queries: every Window is partitioned or allowlisted") {
     val dir = "/root/testdata/sf0.001"
@@ -70,4 +76,32 @@ class AllQueriesWindowShapeSpec extends AnyFunSuite {
       assert(names.contains(n), s"allowlisted $n no longer registered")
     }
   }
+}
+
+object AllQueriesWindowShapeSpec {
+  private val SpecOpen = """windowspecdefinition\(""".r
+  private val SortKey = """ (ASC|DESC) NULLS (FIRST|LAST)$""".r.unanchored
+
+  /** The argument lists of the plan's `windowspecdefinition(…)` calls whose
+    * FIRST argument is a sort key: partition expressions precede the sort
+    * spec, so such a spec has no partitioning. Arguments are split at
+    * parenthesis depth 0, so a key like `unix_micros(h#1)` stays whole. */
+  def unpartitionedSpecs(plan: String): Seq[String] =
+    SpecOpen.findAllMatchIn(plan).map { m =>
+      var depth = 0
+      var firstEnd = -1
+      var i = m.end
+      while (depth >= 0 && i < plan.length) {
+        plan(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case ',' if depth == 0 && firstEnd < 0 => firstEnd = i
+          case _ =>
+        }
+        i += 1
+      }
+      val args = plan.substring(m.end, i - 1)
+      (args, if (firstEnd < 0) args else plan.substring(m.end, firstEnd))
+    }.collect { case (args, first) if SortKey.matches(first) => args }
+      .toSeq.distinct
 }
