@@ -22,18 +22,22 @@ final class IngestController(spark: SparkSession, store: IngestionStateStore) {
 
   final case class Started(ingestionId: String)
 
-  /** A28: dispatch + async run. Unsupported file types reject up front, like
-    * the controller's 400 (`ingestion_controllers.py:60-66`). */
+  /** A28: async run. Validation (file type included) already happened when
+    * the [[IngestRequest]] was built, like the controller's 400
+    * (`ingestion_controllers.py:60-66`). At most one run per ingestion id:
+    * the id is claimed atomically, and a start while its run is RUNNING
+    * throws [[IngestionRunning]] — two runs of one id would send duplicate
+    * chunks and the loser would fail partway on the forward-only store. */
   def ingest(request: IngestRequest,
       nowMillis: => Long = System.currentTimeMillis()): Started = {
-    val ft = request.fileType.toLowerCase
-    require(Set("json", "jsonl", "parquet", "excel", "csv").contains(ft),
-      s"Unsupported file type: ${request.fileType}")
     // evaluate the by-name clock ONCE: the returned ingestion_id and the id
     // the pipeline runs under must come from the same epoch-millis version
     val now = nowMillis
     val ingestionId = IngestionPipeline.ingestionId(request, now)
-    outcomes.put(ingestionId, "RUNNING")
+    var claimed = false
+    outcomes.compute(ingestionId, (_, prior) =>
+      if (prior == "RUNNING") prior else { claimed = true; "RUNNING" })
+    if (!claimed) throw new IngestionRunning(ingestionId)
     pool.submit(new Runnable {
       override def run(): Unit =
         try {
@@ -58,6 +62,10 @@ final class IngestController(spark: SparkSession, store: IngestionStateStore) {
 
   def shutdown(): Unit = pool.shutdown()
 }
+
+/** A start of an ingestion id whose run is still RUNNING (HTTP 409). */
+final class IngestionRunning(ingestionId: String)
+  extends IllegalStateException(s"ingestion $ingestionId is already running")
 
 /** REST facade with the reference's routes: POST /api/ingest, GET /health,
   * and the global `{status, error}` error envelope (`app/main.py:25-42`). */
@@ -104,7 +112,8 @@ object IngestApiServer {
           case e: Exception => // A30 error envelope
             val msg = Option(e.getMessage).getOrElse("invalid request")
               .replace("\\", "\\\\").replace("\"", "\\\"")
-            respond(ex, 400, s"""{"status":"error","error":"$msg"}""")
+            val code = e match { case _: IngestionRunning => 409; case _ => 400 }
+            respond(ex, code, s"""{"status":"error","error":"$msg"}""")
         }
       }
     })

@@ -1,10 +1,14 @@
 package graft.api
 
+import graft.canon.Identity
+import graft.ingest.FileType
+
 /** Ingestion request (SURVEY.md §2 A29 — `app/schemas/request_model.py:18-66`).
   *
   * Validation semantics reproduced exactly: `file_path`, `callback_url`,
-  * `file_type` required; EXACTLY ONE of `chunkSizeByRecords` (1..4000) or
-  * `chunkSizeByMemory` (bytes) must be set; `reIngestion` defaults to false.
+  * `file_type` required (one of [[FileType]]'s, any case); EXACTLY ONE of
+  * `chunkSizeByRecords` (1..4000) or `chunkSizeByMemory` (bytes) must be set;
+  * `reIngestion` defaults to false.
   */
 final case class IngestRequest(
     filePath: String,
@@ -17,12 +21,18 @@ final case class IngestRequest(
   require(filePath.nonEmpty, "file_path is required")
   require(callbackUrl.nonEmpty, "callback_url is required")
   require(fileType.nonEmpty, "file_type is required")
+  val kind: FileType = FileType.parse(fileType) // any case: JSON = json
   require(chunkSizeByRecords.isDefined ^ chunkSizeByMemory.isDefined,
     "exactly one of chunk_size_by_records and chunk_size_by_memory must be provided")
   chunkSizeByRecords.foreach(n =>
     require(n >= 1 && n <= 4000, s"chunk_size_by_records must be in [1, 4000], got $n"))
   chunkSizeByMemory.foreach(b =>
     require(b >= 1, s"chunk_size_by_memory must be positive, got $b"))
+
+  /** The file identity batch runs and streams derive their ingestion ids
+    * from — over the parsed type, so a JSON run resumes a json one rather
+    * than minting a fresh id and re-sending all. */
+  def fileId: String = Identity.fileId(filePath, kind.name)
 }
 
 /** Persistent per-ingestion progress row — the four columns of the

@@ -1,6 +1,9 @@
 package graft.chunk
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftSql}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -17,67 +20,104 @@ object ChunkAssigner {
 
   /** Add a dense 0-based `rn` column reflecting the total order of
     * `orderCols`, without a single-partition sort: range-partition by the
-    * order keys, sort within partitions, then zipWithIndex over the
-    * MATERIALIZED InternalRow RDD.
+    * order keys, sort within partitions, then number the rows in that order
+    * ([[withInputOrderRowNumber]]'s kernel).
     *
-    * Two subtleties that shape this implementation:
-    *   - repartitionByRange's sampling seed includes the RDD id, so two
-    *     separate jobs over the same DataFrame can get DIFFERENT partition
-    *     boundaries — any offset scheme computed in a side job is silently
-    *     wrong. Materializing one RDD instance pins the partitioning;
-    *     zipWithIndex's internal count job and the main job then share the
-    *     same shuffle files (stage reuse).
-    *   - staying on InternalRow (queryExecution.toRdd + JoinedRow) avoids
-    *     the per-row external-Row conversion that makes naive df.rdd
-    *     zipWithIndex slow. */
+    * repartitionByRange's sampling seed includes the RDD id, so two separate
+    * jobs over the same DataFrame can get DIFFERENT partition boundaries —
+    * any offset scheme computed in a side job is silently wrong. The kernel
+    * materializes one RDD instance, which pins the partitioning;
+    * zipWithIndex's internal count job and the main job then share the same
+    * shuffle files (stage reuse). */
   def withRowNumber(df: DataFrame, orderCols: Seq[Column],
       numPartitions: Int = 0, rnName: String = "rn"): DataFrame = {
-    val spark = df.sparkSession
     val parts = if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val indexed = org.apache.spark.sql.GraftSql.toInternalRdd(sorted)
-      .zipWithIndex().mapPartitions { it =>
-        val joiner = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        val idxRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-        it.map { case (row, idx) =>
-          idxRow.update(0, idx)
-          joiner(row, idxRow): org.apache.spark.sql.catalyst.InternalRow
-        }
-      }
-    org.apache.spark.sql.GraftSql.internalCreateDataFrame(spark, indexed,
-      StructType(sorted.schema.fields :+ StructField(rnName, LongType, nullable = false)))
+      else df.sparkSession.sessionState.conf.numShufflePartitions
+    rowNumbered(df.repartitionByRange(parts, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*), rnName)
   }
 
   /** Add a dense 0-based `rn` column in the DataFrame's EXISTING order —
     * input/file order for file sources, whose partitions enumerate
-    * (file, block) deterministically. Same InternalRow + JoinedRow scheme as
-    * `withRowNumber`, minus the range repartition: no shuffle at all, one
-    * lightweight count job from zipWithIndex. */
-  def withInputOrderRowNumber(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val indexed = org.apache.spark.sql.GraftSql.toInternalRdd(df)
-      .zipWithIndex().mapPartitions { it =>
-        val joiner = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-        val idxRow = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-        it.map { case (row, idx) =>
-          idxRow.update(0, idx)
-          joiner(row, idxRow): org.apache.spark.sql.catalyst.InternalRow
-        }
-      }
-    org.apache.spark.sql.GraftSql.internalCreateDataFrame(spark, indexed,
-      StructType(df.schema.fields :+ StructField("rn", LongType, nullable = false)))
-  }
+    * (file, block) deterministically. No shuffle, one count job from
+    * zipWithIndex (none for a single partition). */
+  def withInputOrderRowNumber(df: DataFrame): DataFrame = rowNumbered(df, "rn")
 
-  /** A9/A11: count-based chunking — chunk_number = lastChunk + 1 + rn / n. */
-  def assignByCount(df: DataFrame, orderCols: Seq[Column], chunkSize: Int,
-      lastChunk: Long = -1L): DataFrame = {
+  private def rowNumbered(df: DataFrame, rnName: String): DataFrame =
+    appendLong(df, rnName, GraftSql.toInternalRdd(df).zipWithIndex())
+
+  /** Append the non-null long `name` paired with each of `df`'s rows,
+    * staying on InternalRow (toRdd + JoinedRow): no per-row external-Row
+    * conversion, which is what makes naive df.rdd zipWithIndex slow. */
+  private def appendLong(df: DataFrame, name: String,
+      rows: RDD[(InternalRow, Long)]): DataFrame =
+    GraftSql.internalCreateDataFrame(df.sparkSession, rows.mapPartitions { it =>
+      val joiner = new JoinedRow
+      val extra = new GenericInternalRow(1)
+      it.map { case (row, v) => extra.update(0, v); joiner(row, extra): InternalRow }
+    }, StructType(df.schema.fields :+ StructField(name, LongType, nullable = false)))
+
+  /** A9/A11: chunk number of row `rn`, `lastChunk + 1 + rn div chunkSize` —
+    * integer `div`, not double `/`: row numbers stay exact past 2^53. */
+  def countChunkNumber(chunkSize: Int, lastChunk: Long): Column = {
     require(chunkSize >= 1 && chunkSize <= 4000,
       s"chunk_size_by_records must be in [1, 4000], got $chunkSize") // request_model.py:22
-    // integer `div`, not double `/`: row numbers stay exact past 2^53
-    withRowNumber(df, orderCols)
-      .withColumn("chunk_number", lit(lastChunk + 1) + expr(s"rn div $chunkSize"))
+    lit(lastChunk + 1) + expr(s"rn div $chunkSize")
+  }
+
+  /** A9/A11: count-based chunking in `orderCols` order. */
+  def assignByCount(df: DataFrame, orderCols: Seq[Column], chunkSize: Int,
+      lastChunk: Long = -1L): DataFrame = {
+    val chunkNumber = countChunkNumber(chunkSize, lastChunk) // checks first
+    withRowNumber(df, orderCols).withColumn("chunk_number", chunkNumber)
+  }
+
+  /** A12/A14/A15: per `chunk_number`, `n_records`, the canonical `rec`s in
+    * `rn` order (array_sort of (rn, rec) structs sorts on rn) and their
+    * `checksum`, sha256 of `[` ‖ records joined by `,` ‖ `]`. */
+  def aggregateChunks(chunked: DataFrame): DataFrame =
+    chunked
+      .groupBy(col("chunk_number"))
+      .agg(count(lit(1)).as("n_records"),
+        transform(array_sort(collect_list(struct(col("rn"), col("rec")))),
+          x => x.getField("rec")).as("records"))
+      .withColumn("checksum",
+        sha2(concat(lit("["), array_join(col("records"), ","), lit("]")), 256))
+      .orderBy(col("chunk_number"))
+
+  /** EXCLUSIVE prefix sum of `sizeCol` in `orderCols` order, appended as
+    * `outName` — the distributed scan: range-partition + sort (partitions
+    * are order-contiguous), per-partition totals collected once (K longs,
+    * one job whose shuffle files the second job reuses), then every row's
+    * offset assigned locally as partition-base + running sum. No
+    * single-task window, no join, no N-row driver state — the same
+    * carry-chain discipline as [[assignByBytes]], but with the carry
+    * reduced to one addition so a single collect replaces the K-step
+    * serial fold. `sizeCol` must be non-null (cast to long). */
+  def withPrefixSum(df: DataFrame, orderCols: Seq[Column], sizeCol: Column,
+      outName: String = "tok_off"): DataFrame = {
+    val spark = df.sparkSession
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val sorted = df.withColumn("__psz", sizeCol.cast("long"))
+      .repartitionByRange(parts, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+    val idx = sorted.schema.fieldIndex("__psz")
+    val rdd = GraftSql.toInternalRdd(sorted)
+    val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
+        var s = 0L
+        it.foreach(r => s += r.getLong(idx))
+        Iterator((i, s))
+      }.collect().sortBy(_._1).map(_._2)
+    val bases = totals.scanLeft(0L)(_ + _)
+    val bc = spark.sparkContext.broadcast(bases)
+    appendLong(sorted, outName, rdd.mapPartitionsWithIndex { case (i, it) =>
+      var acc = bc.value(i)
+      it.map { row =>
+        val off = acc
+        acc += row.getLong(idx)
+        (row, off)
+      }
+    }).drop("__psz")
   }
 
   /** A10: byte-budget chunking — greedy packing where adding a record may
@@ -99,47 +139,6 @@ object ChunkAssigner {
     * (`SortedBoundaryRank`). Driver/broadcast footprint is one long per
     * chunk; serial dependency is K carry handoffs, not N rows.
     */
-  /** EXCLUSIVE prefix sum of `sizeCol` in `orderCols` order, appended as
-    * `outName` — the distributed scan: range-partition + sort (partitions
-    * are order-contiguous), per-partition totals collected once (K longs,
-    * one job whose shuffle files the second job reuses), then every row's
-    * offset assigned locally as partition-base + running sum. No
-    * single-task window, no join, no N-row driver state — the same
-    * carry-chain discipline as [[assignByBytes]], but with the carry
-    * reduced to one addition so a single collect replaces the K-step
-    * serial fold. `sizeCol` must be non-null (cast to long). */
-  def withPrefixSum(df: DataFrame, orderCols: Seq[Column], sizeCol: Column,
-      outName: String = "tok_off"): DataFrame = {
-    val spark = df.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
-    val sorted = df.withColumn("__psz", sizeCol.cast("long"))
-      .repartitionByRange(parts, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
-    val idx = sorted.schema.fieldIndex("__psz")
-    val rdd = org.apache.spark.sql.GraftSql.toInternalRdd(sorted)
-    val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
-        var s = 0L
-        it.foreach(r => s += r.getLong(idx))
-        Iterator((i, s))
-      }.collect().sortBy(_._1).map(_._2)
-    val bases = totals.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(bases)
-    val out = rdd.mapPartitionsWithIndex { case (i, it) =>
-      val joiner = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      val extra = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-      var acc = bc.value(i)
-      it.map { row =>
-        extra.update(0, acc)
-        acc += row.getLong(idx)
-        joiner(row, extra): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    org.apache.spark.sql.GraftSql.internalCreateDataFrame(spark, out,
-      StructType(sorted.schema.fields :+
-        StructField(outName, LongType, nullable = false)))
-      .drop("__psz")
-  }
-
   def assignByBytes(df: DataFrame, orderCols: Seq[Column], budgetBytes: Long,
       sizeCol: Column, lastChunk: Long = -1L): DataFrame = {
     // "__rn", not "rn": ingestion callers pass frames that already carry an

@@ -7,7 +7,6 @@ import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** End-to-end ingestion (SURVEY.md §3.4): scan → canonical serialize → chunk
   * → per-chunk checksum agg → ordered ACK-gated delivery → crash-safe resume.
@@ -26,52 +25,29 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object IngestionPipeline {
 
-  final case class ChunkRow(chunkNumber: Long, nRecords: Long, checksum: String,
-      canonicalRecords: Seq[String])
-
   final case class Result(ingestionId: String, chunksSent: Long, chunksSkipped: Long,
       totalRecords: Long, state: Option[IngestionState])
 
-  /** Scan dispatch (A1–A6, A28's file_type branch — case-insensitive; unknown
-    * type rejected like `ingestion_controllers.py:60-66`). "excel" accepts the
-    * reference's semantics over CSV-with-header input (A5–A8: header row =
-    * schema, short rows null-padded); native xlsx needs no third-party jar in
-    * this environment and is deferred (SURVEY.md §7.4 #4). */
-  def scan(spark: SparkSession, request: IngestRequest): DataFrame =
-    request.fileType.toLowerCase match {
-      case "json" =>
-        // top-level JSON array (A1) or JSONL; recursive dir glob (A2) and
-        // s3a/gs/abfss/file URIs (A3) come free from the Hadoop FS layer
-        spark.read
-          .option("multiLine", "true")
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.json")
-          .json(request.filePath)
-      case "jsonl" =>
-        spark.read.option("recursiveFileLookup", "true").json(request.filePath)
-      case "parquet" => spark.read.parquet(request.filePath)
-      case "excel" if looksLikeXlsx(request.filePath) =>
-        // native SpreadsheetML DataSource V2 (A4–A7 semantics in the source);
-        // covers both a single .xlsx file and a directory of .xlsx files —
-        // the CSV fallback must never see zip bytes (it would deliver
-        // garbage records with valid checksums)
-        spark.read.format("xlsx").load(request.filePath)
-      case "excel" | "csv" =>
-        // pre-converted spreadsheet input with the same header semantics
-        spark.read.option("header", "true").option("mode", "PERMISSIVE")
-          .csv(request.filePath)
-      case other =>
-        throw new IllegalArgumentException(s"Unsupported file type: $other")
+  /** Scan (A1–A8): the request's [[FileType]] reader, options and A7 filter;
+    * `excel` input that is not xlsx is pre-converted CSV with the same
+    * header semantics. */
+  def scan(spark: SparkSession, request: IngestRequest): DataFrame = {
+    val ft = request.kind match {
+      case FileType.Excel if !looksLikeXlsx(request.filePath) => FileType.Csv
+      case t => t
     }
+    ft.countedRows(spark.read.format(ft.format).options(ft.options).load(request.filePath))
+  }
 
-  /** "excel" routes to the native xlsx source for a .xlsx file OR a
+  /** `excel` routes to the native xlsx source for a .xlsx file OR a
     * directory holding .xlsx files (XlsxSource.expand reads one partition
-    * per file); anything else falls back to pre-converted CSV. Probe
-    * failures PROPAGATE — a transient FS error must fail the request, not
-    * silently demote zip bytes to the CSV parser. */
+    * per file); anything else falls back to pre-converted CSV — which must
+    * never see zip bytes (it would deliver garbage records with valid
+    * checksums). Probe failures PROPAGATE — a transient FS error must fail
+    * the request, not silently demote zip bytes to the CSV parser. */
   private def looksLikeXlsx(path: String): Boolean =
     path.toLowerCase.endsWith(".xlsx") || {
-      // glob paths (e.g. /data/*.csv with fileType "excel") fall through to
+      // glob paths (e.g. /data/*.csv with fileType excel) fall through to
       // the CSV reader's glob support — getFileStatus on a glob literal
       // would throw FileNotFoundException before dispatch
       !path.exists("*?[{".contains(_)) && {
@@ -83,87 +59,77 @@ object IngestionPipeline {
       }
     }
 
-  /** A7 (Excel semantics): drop rows where every cell is null/empty-string —
-    * they do not count toward progress. */
-  def dropEmptyRows(df: DataFrame): DataFrame = {
-    val anyNonEmpty = df.columns
-      .map(c => col(c).isNotNull && col(c).cast("string") =!= "")
-      .reduce(_ || _)
-    df.filter(anyNonEmpty)
-  }
-
-  /** Stable 0-based row number in input order (file order for file sources:
-    * partitions enumerate (file, block) deterministically). Delegates to the
-    * InternalRow + JoinedRow path — no per-row external-Row conversion, no
-    * sort, no single-partition funnel. */
+  /** Stable 0-based row number in input order (file order for file
+    * sources): no sort, no single-partition funnel. */
   def withInputOrderRn(df: DataFrame): DataFrame =
     ChunkAssigner.withInputOrderRowNumber(df)
 
   /** Distributed chunk construction: returns (chunkNumber, nRecords,
-    * checksum, orderedCanonicalRecords) — one row per chunk, built with
+    * orderedCanonicalRecords, checksum) — one row per chunk, built with
     * map-side parallelism and a single groupBy shuffle. Numbering starts at
     * `lastChunk + 1` (streaming batches continue a running sequence). */
   def buildChunks(df: DataFrame, request: IngestRequest,
       lastChunk: Long = -1L): DataFrame = {
     val withRec = withInputOrderRn(df)
       .withColumn("rec", CanonicalJson(struct(df.columns.map(col): _*)))
-    val chunked = request.chunkSizeByRecords match {
+    ChunkAssigner.aggregateChunks(request.chunkSizeByRecords match {
       case Some(n) =>
-        withRec.withColumn("chunk_number", lit(lastChunk + 1) + expr(s"rn div $n"))
+        withRec.withColumn("chunk_number", ChunkAssigner.countChunkNumber(n, lastChunk))
       case None =>
         // A10/A13: byte-budget greedy packing over serialized record sizes
         ChunkAssigner.assignByBytes(
           withRec, Seq(col("rn")), request.chunkSizeByMemory.get,
           octet_length(col("rec")).cast("long"), lastChunk = lastChunk)
-    }
-    chunked
-      .groupBy(col("chunk_number"))
-      .agg(count(lit(1)).as("n_records"),
-        transform(array_sort(collect_list(struct(col("rn"), col("rec")))),
-          x => x.getField("rec")).as("records"))
-      .withColumn("checksum",
-        sha2(concat(lit("["), array_join(col("records"), ","), lit("]")), 256))
-      .orderBy(col("chunk_number"))
+    })
   }
 
   /** The id a batch ingestion of `request` runs and persists under — the
-    * one derivation both [[run]] and the API controller use. Identity
-    * uses the NORMALIZED file type — dispatch lowercases it, so "JSON" and
-    * "json" runs over the same file must resume the same ingestion rather
-    * than silently minting a fresh id and re-sending all. */
+    * one derivation both [[run]] and the API controller use. */
   def ingestionId(request: IngestRequest, nowMillis: => Long): String =
-    Identity.ingestionId(
-      Identity.fileId(request.filePath, request.fileType.toLowerCase),
-      Identity.version(request.reIngestion, nowMillis))
+    Identity.ingestionId(request.fileId, Identity.version(request.reIngestion, nowMillis))
 
   /** Run one ingestion to completion (or terminal failure). Resumable: a
     * rerun with reIngestion=false continues after the last ACKed chunk. */
   def run(spark: SparkSession, request: IngestRequest, store: IngestionStateStore,
       nowMillis: => Long = System.currentTimeMillis()): Result = {
     val ingestionId = this.ingestionId(request, nowMillis)
+    val (sent, skipped, totalRecords) = deliver(scan(spark, request), request,
+      ingestionId, store, lastChunk = -1L, closed = true)
+    Result(ingestionId, sent, skipped, totalRecords, store.get(ingestionId))
+  }
 
-    val lastAcked = store.lastChunk(ingestionId) // -1 on fresh start
-    var totalRecords = store.totalRecords(ingestionId)
-
-    val source = request.fileType.toLowerCase match {
-      case "excel" | "csv" => dropEmptyRows(scan(spark, request))
-      case _ => scan(spark, request)
-    }
-    val chunks = buildChunks(source, request).cache()
+  /** The one delivery step of a batch run and of every streaming
+    * micro-batch: build `source`'s chunks numbered from `lastChunk + 1`,
+    * cached so the skip count and the per-partition delivery jobs do not
+    * re-run the parse/canonicalize/shuffle DAG, then deliver every chunk
+    * after the last ACK. A `closed` source is a whole input: its highest
+    * chunk carries is_last and the run ends with [[complete]]. An open
+    * stream has no last chunk (-2: no chunk number can equal it). */
+  private[ingest] def deliver(source: DataFrame, request: IngestRequest,
+      ingestionId: String, store: IngestionStateStore, lastChunk: Long,
+      closed: Boolean): (Long, Long, Long) = {
+    val chunks = buildChunks(source, request, lastChunk).cache()
     try {
-      val maxChunk = chunks.agg(max(col("chunk_number"))).collect()(0) match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
-      val (sent, skipped, newTotal) = deliverChunksDistributed(chunks,
-        ingestionId, store, request.callbackUrl, lastAcked, totalRecords, maxChunk)
-      totalRecords = newTotal
-      val sink = new OrderedAckHttpSink(request.callbackUrl)
-
-      sink.sendCompleted(ingestionId, maxChunk, totalRecords) // A22
-      store.markCompleted(ingestionId)
-      Result(ingestionId, sent, skipped, totalRecords, store.get(ingestionId))
+      val maxChunk = if (!closed) -2L
+        else chunks.agg(max(col("chunk_number"))).collect()(0) match {
+          case r if r.isNullAt(0) => -1L
+          case r => r.getLong(0)
+        }
+      val delivered @ (_, _, totalRecords) = deliverChunksDistributed(chunks,
+        ingestionId, store, request.callbackUrl, store.lastChunk(ingestionId),
+        store.totalRecords(ingestionId), maxChunk)
+      if (closed) complete(request, store, ingestionId, maxChunk, totalRecords)
+      delivered
     } finally chunks.unpersist()
+  }
+
+  /** A22: the COMPLETED handshake, then the terminal state — the close of a
+    * batch run and of a drained stream. */
+  private[ingest] def complete(request: IngestRequest, store: IngestionStateStore,
+      ingestionId: String, lastChunk: Long, totalRecords: Long): Unit = {
+    new OrderedAckHttpSink(request.callbackUrl)
+      .sendCompleted(ingestionId, lastChunk, totalRecords)
+    store.markCompleted(ingestionId)
   }
 
   /** Executor-direct ordered delivery (the batch hot path): chunk payloads

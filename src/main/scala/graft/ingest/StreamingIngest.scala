@@ -2,7 +2,6 @@ package graft.ingest
 
 import graft.api.IngestRequest
 import graft.canon.Identity
-import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -23,28 +22,18 @@ import org.apache.spark.sql.types.StructType
 object StreamingIngest {
 
   /** Start a continuous ingestion of files arriving under `request.filePath`
-    * (a directory). `Trigger.AvailableNow` drains what exists and stops;
-    * restart with the same checkpoint to pick up new arrivals. */
+    * (a directory), read with the request's [[FileType]] reader, options and
+    * A7 filter, like the batch scan. `excel` streams native xlsx
+    * unconditionally: a watched directory can be empty at start.
+    * `Trigger.AvailableNow` drains what exists and stops; restart with the
+    * same checkpoint to pick up new arrivals. */
   def start(spark: SparkSession, request: IngestRequest, store: IngestionStateStore,
       schema: StructType, checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow()): (String, StreamingQuery) = {
-    // normalized file type, like the batch path: "Excel" and "excel" restarts
-    // must resume the same ingestion, not mint a fresh id and re-send
-    val fileId = Identity.fileId(request.filePath, request.fileType.toLowerCase)
-    val ingestionId = Identity.ingestionId(fileId, "streaming")
-
-    val source = request.fileType.toLowerCase match {
-      case "json" | "jsonl" => spark.readStream.schema(schema)
-        .option("recursiveFileLookup", "true").json(request.filePath)
-      case "parquet" => spark.readStream.schema(schema).parquet(request.filePath)
-      case "csv" => spark.readStream.schema(schema)
-        .option("header", "true").csv(request.filePath)
-      case "excel" =>
-        // native xlsx micro-batch stream: each batch reads the files that
-        // appeared since the last committed offset (one partition per file)
-        spark.readStream.format("xlsx").schema(schema).load(request.filePath)
-      case other => throw new IllegalArgumentException(s"Unsupported file type: $other")
-    }
+    val ingestionId = Identity.ingestionId(request.fileId, "streaming")
+    val ft = request.kind
+    val source = ft.countedRows(spark.readStream.schema(schema).format(ft.format)
+      .options(ft.options).load(request.filePath))
 
     val query = source.writeStream
       .queryName(s"graft_ingest_${ingestionId.take(12)}")
@@ -69,27 +58,13 @@ object StreamingIngest {
         store.putMeta(anchorKey, b.toString)
         b
     }
-    // cached like the batch path: the skip-count job and the per-partition
-    // delivery jobs must not re-run the parse/canonicalize/shuffle DAG
-    val chunks = IngestionPipeline.buildChunks(batch, request, lastChunk = base)
-      .cache()
-    try {
-      // executor-direct like the batch path; maxChunk = -2 sentinel (an open
-      // stream has no last chunk, and no chunk number can equal -2)
-      IngestionPipeline.deliverChunksDistributed(chunks, ingestionId, store,
-        request.callbackUrl,
-        lastAcked = store.lastChunk(ingestionId),
-        startingTotal = store.totalRecords(ingestionId),
-        maxChunk = -2L)
-    } finally chunks.unpersist()
+    IngestionPipeline.deliver(batch, request, ingestionId, store,
+      lastChunk = base, closed = false)
   }
 
   /** Close out a drained stream: COMPLETED handshake + terminal state (A22). */
   def finish(request: IngestRequest, store: IngestionStateStore,
-      ingestionId: String): Unit = {
-    val sink = new OrderedAckHttpSink(request.callbackUrl)
-    sink.sendCompleted(ingestionId, store.lastChunk(ingestionId),
-      store.totalRecords(ingestionId))
-    store.markCompleted(ingestionId)
-  }
+      ingestionId: String): Unit =
+    IngestionPipeline.complete(request, store, ingestionId,
+      store.lastChunk(ingestionId), store.totalRecords(ingestionId))
 }

@@ -35,26 +35,17 @@ object ChunkOps {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   // -- B28: per-chunk canonical checksum (A14/A15) ---------------------------
-  // Records are canonical-JSON'd by the native expression, then aggregated in
-  // file order within each chunk: collect_list of (rn, rec) structs →
-  // array_sort (sorts on rn, the leading field) → join → sha2. This is the
-  // map-side-combinable shape of "ordered concat then hash".
+  // Records are canonical-JSON'd by the native expression, then checksummed
+  // by the ingestion path's own per-chunk aggregate.
   private def q28(s: SparkSession, dir: String): DataFrame = {
     val chunked = ChunkAssigner.assignByCount(
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
           col("l_suppkey"), col("l_returnflag")),
       Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")), 200)
-    chunked
-      .withColumn("rec", CanonicalJson(struct(
-        col("l_linenumber"), col("l_orderkey"), col("l_returnflag"))))
-      .groupBy(col("chunk_number"))
-      .agg(count(lit(1)).as("n_records"),
-        sha2(concat(lit("["),
-          array_join(transform(array_sort(collect_list(struct(col("rn"), col("rec")))),
-            x => x.getField("rec")), ","),
-          lit("]")), 256).as("checksum"))
-      .orderBy(col("chunk_number"))
+    ChunkAssigner.aggregateChunks(chunked.withColumn("rec", CanonicalJson(struct(
+        col("l_linenumber"), col("l_orderkey"), col("l_returnflag")))))
+      .select("chunk_number", "n_records", "checksum")
   }
 
   private val q28Sql =

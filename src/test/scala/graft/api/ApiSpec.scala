@@ -81,6 +81,38 @@ class ApiSpec extends AnyFunSuite {
     } finally { api.stop(0); receiver.stop(0); controller.shutdown() }
   }
 
+  test("a second start of a RUNNING ingestion id answers 409; the run sends each chunk once") {
+    // two resume POSTs of one file resolve to one id; a second concurrent run
+    // would re-send chunks and fail partway on the forward-only store
+    val receiver = new graft.receiver.RecordingPimCore
+    val store = IngestionStateStore.inMemory()
+    val controller = new IngestController(spark, store)
+    val (api, apiUrl) = IngestApiServer.serve(controller)
+    try {
+      val f = Files.createTempFile("graft_api_twice", ".json")
+      Files.writeString(f,
+        (0 until 40).map(i => s"""{"id": $i}""").mkString("[", ",", "]"))
+      val body = s"""{"file_path": "${f.toString}", "file_type": "json",
+         | "callback_url": "${receiver.url}", "chunk_size_by_records": 4}""".stripMargin
+      val answers = Seq(post(s"$apiUrl/api/ingest", body), post(s"$apiUrl/api/ingest", body))
+      val (first, second) = (answers(0), answers(1))
+      assert(first._1 == 200, first)
+      val iid = MiniJson.parse(first._2).asInstanceOf[MiniJson.JObj]
+        .get("ingestion_id").collect { case MiniJson.JStr(s) => s }.get
+      assert(second._1 == 409, second)
+      val err = MiniJson.parse(second._2).asInstanceOf[MiniJson.JObj]
+      assert(err.get("status").contains(MiniJson.JStr("error")))
+      assert(err.get("error").exists(_.toString.contains(iid)), second)
+
+      controller.awaitAll()
+      assert(controller.status(iid)._1.contains("DONE"))
+      assert(store.get(iid).contains(IngestionState(iid, 9, 40, IngestionState.Completed)))
+      assert(receiver.posts(iid).map(_.chunkNumber) == (0L to 9L),
+        "every chunk must be POSTed exactly once, in order")
+      assert(receiver.mock.completedCount == 1)
+    } finally { api.stop(0); receiver.stop(); controller.shutdown() }
+  }
+
   test("concurrent ingestions of different files interleave safely") {
     // the reference runs each ingestion as an independent background task;
     // receiver-side ordering state is per ingestion_id (A24 is per-stream)

@@ -101,6 +101,31 @@ class ChunkingLawsSpec extends AnyFunSuite {
     assert(counts.forall(_._2 > 0))
   }
 
+  test("withInputOrderRowNumber: dense 0..n-1 in input order across partitions") {
+    // spark.range enumerates ids in partition order, so input order = id order
+    val df = spark.range(0L, 1234L, 1L, 7).select(col("id"), (col("id") * 7919 % 101).as("v"))
+    assert(df.rdd.getNumPartitions == 7)
+    val got = ChunkAssigner.withInputOrderRowNumber(df)
+    assert(got.columns.toSeq == Seq("id", "v", "rn"))
+    val rows = got.select("id", "rn").as[(Long, Long)].collect()
+    assert(rows.map(_._2).sorted.toSeq == (0L until 1234L))
+    assert(rows.forall { case (id, rn) => id == rn }, "rn is not the input position")
+  }
+
+  test("withRowNumber == row_number() OVER (ORDER BY ...) - 1 across partitions") {
+    // duplicate leading keys, unique (a, b) pairs, shuffled input
+    val rnd = new scala.util.Random(23)
+    val rows = rnd.shuffle((0 until 1500).map(i => (i % 37, i.toLong, s"p$i")).toList)
+    val df = rows.toDF("a", "b", "payload").repartition(5)
+    val got = ChunkAssigner.withRowNumber(df, Seq(col("a"), col("b").desc))
+    assert(got.columns.toSeq == Seq("a", "b", "payload", "rn"))
+    assert(got.rdd.getNumPartitions > 1, "row numbering collapsed to one partition")
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("a"), col("b").desc)
+    val expect = df.withColumn("rn", row_number().over(w) - 1)
+      .select("b", "rn").as[(Long, Long)].collect().toMap
+    assert(got.select("b", "rn").as[(Long, Long)].collect().toMap == expect)
+  }
+
   test("withPrefixSum == the window cumsum, with no single-partition stage") {
     // sizes chosen adversarially: zeros, ones, large values, shuffled input
     val rnd = new scala.util.Random(17)
