@@ -5,7 +5,8 @@ import graft.canon.{CanonicalJson, Identity}
 import graft.chunk.ChunkAssigner
 import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** End-to-end ingestion (SURVEY.md §3.4): scan → canonical serialize → chunk
@@ -100,7 +101,7 @@ object IngestionPipeline {
 
   /** The one delivery step of a batch run and of every streaming
     * micro-batch: build `source`'s chunks numbered from `lastChunk + 1`,
-    * cached so the skip count and the per-partition delivery jobs do not
+    * cached so the `maxChunk` job and the per-partition delivery jobs do not
     * re-run the parse/canonicalize/shuffle DAG, then deliver every chunk
     * after the last ACK. A `closed` source is a whole input: its highest
     * chunk carries is_last and the run ends with [[complete]]. An open
@@ -132,6 +133,12 @@ object IngestionPipeline {
     store.markCompleted(ingestionId)
   }
 
+  /** One delivery task's report to the driver: its won ACKs as
+    * (chunk_number, n_records), its count of already-ACKed chunks, and the
+    * terminal error that stopped it, if any. */
+  private final case class Delivered(acks: Seq[(Long, Long)], skipped: Long,
+      error: Option[String])
+
   /** Executor-direct ordered delivery (the batch hot path): chunk payloads
     * POST from executor tasks, never crossing the driver — at scale the
     * driver NIC is no longer the funnel and no chunk batch can OOM it.
@@ -140,8 +147,9 @@ object IngestionPipeline {
     * chunks are range-partitioned into contiguous chunk_number ranges, and
     * the driver runs ONE partition's task at a time, in range order; within
     * a task chunks POST in sorted order. The driver receives only
-    * (chunk_number, n_records) ACK summaries and persists progress (A21)
-    * between tasks. A failing chunk aborts the token advance; the ACKs its
+    * (chunk_number, n_records) ACK summaries and a count of the chunks it
+    * skipped as already ACKed (A20), and persists progress (A21) between
+    * tasks. A failing chunk aborts the token advance; the ACKs its
     * task already won are persisted first, so terminal state still points at
     * the exact last ACKed chunk. A hard crash can lose at most one task's
     * ACK summaries — those chunks re-send on resume and the receiver's
@@ -150,17 +158,19 @@ object IngestionPipeline {
   def deliverChunksDistributed(chunks: DataFrame, ingestionId: String,
       store: IngestionStateStore, callbackUrl: String, lastAcked: Long,
       startingTotal: Long, maxChunk: Long): (Long, Long, Long) = {
-    val spark = chunks.sparkSession
-    val skipped = chunks.filter(col("chunk_number") <= lastAcked).count() // A20
-    // buildChunks ends with orderBy(chunk_number): the (cached) chunks are
-    // already range-partitioned into contiguous ascending ranges, so the
-    // pending filter preserves global order with NO re-shuffle of payloads
-    val rdd = chunks.filter(col("chunk_number") > lastAcked).rdd
-    val sc = spark.sparkContext
+    val sc = chunks.sparkSession.sparkContext
+    // every cached chunk, read as InternalRow: a chunk at or below the last
+    // ACK (A20) costs its task one long read, not an external-Row
+    // conversion of its records. buildChunks ends with orderBy(chunk_number),
+    // so the partitions are contiguous ascending ranges, in order
+    val rdd = GraftSql.toInternalRdd(chunks)
+    val Seq(iChunk, iN, iRecords, iChecksum) =
+      Seq("chunk_number", "n_records", "records", "checksum").map(chunks.schema.fieldIndex)
 
-    val deliverPartition = (it: Iterator[Row]) => {
+    val deliverPartition = (it: Iterator[InternalRow]) => {
       val sink = new OrderedAckHttpSink(callbackUrl)
       val acks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+      var skipped = 0L
       var error: Option[String] = None
       // one-chunk lookahead: POSTs must stay strictly serial (A24), but body
       // CONSTRUCTION is not order-constrained — build chunk i+1's ~MB body on
@@ -168,19 +178,26 @@ object IngestionPipeline {
       val builder = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
         val t = new Thread(r, "chunk-body-builder"); t.setDaemon(true); t
       })
-      def buildNext(): Option[(Long, Long, java.util.concurrent.Future[String])] =
-        if (!it.hasNext) None
-        else {
+      // the scan may reuse its row on the next it.next(): every field the
+      // helper thread reads is copied out here, on the task thread
+      def buildNext(): Option[(Long, Long, java.util.concurrent.Future[String])] = {
+        var next: Option[(Long, Long, java.util.concurrent.Future[String])] = None
+        while (next.isEmpty && it.hasNext) {
           val row = it.next()
-          val chunkNumber = row.getLong(row.fieldIndex("chunk_number"))
-          val n = row.getLong(row.fieldIndex("n_records"))
-          val records = row.getSeq[String](row.fieldIndex("records"))
-          val checksum = row.getString(row.fieldIndex("checksum"))
-          Some((chunkNumber, n, builder.submit(() =>
-            sink.chunkBody(ingestionId, chunkNumber,
-              Identity.chunkId(ingestionId, chunkNumber), checksum, records,
-              isLast = chunkNumber == maxChunk))))
+          val chunkNumber = row.getLong(iChunk)
+          if (chunkNumber <= lastAcked) skipped += 1
+          else {
+            val records = row.getArray(iRecords).copy()
+            val checksum = row.getUTF8String(iChecksum).toString
+            next = Some((chunkNumber, row.getLong(iN), builder.submit(() =>
+              sink.chunkBody(ingestionId, chunkNumber,
+                Identity.chunkId(ingestionId, chunkNumber), checksum,
+                IndexedSeq.tabulate(records.numElements)(records.getUTF8String(_).toString),
+                isLast = chunkNumber == maxChunk))))
+          }
         }
+        next
+      }
       try {
         var pending = buildNext()
         while (pending.isDefined && error.isEmpty) {
@@ -212,18 +229,19 @@ object IngestionPipeline {
           }
         }
       } finally builder.shutdownNow()
-      (acks.toSeq, error)
+      Delivered(acks.toSeq, skipped, error)
     }
 
     // async single-partition launch: the NEXT range's POSTs start while the
     // driver persists the previous range's ACKs
-    def launch(part: Int): org.apache.spark.FutureAction[(Seq[(Long, Long)], Option[String])] = {
-      val res = new java.util.concurrent.atomic.AtomicReference[(Seq[(Long, Long)], Option[String])]
+    def launch(part: Int): org.apache.spark.FutureAction[Delivered] = {
+      val res = new java.util.concurrent.atomic.AtomicReference[Delivered]
       sc.submitJob(rdd, deliverPartition, Seq(part),
-        (_: Int, r: (Seq[(Long, Long)], Option[String])) => res.set(r), res.get())
+        (_: Int, r: Delivered) => res.set(r), res.get())
     }
 
     var sent = 0L
+    var skipped = 0L
     var totalRecords = startingTotal
     var failure: Option[String] = None
     // A21, batched: one durable write per task instead of one per chunk.
@@ -242,8 +260,9 @@ object IngestionPipeline {
       var p = 0
       try {
         while (p < nParts && failure.isEmpty) {
-          val (acks, err) = scala.concurrent.Await.result(
+          val Delivered(acks, partSkipped, err) = scala.concurrent.Await.result(
             inflight, scala.concurrent.duration.Duration.Inf)
+          skipped += partSkipped
           p += 1
           // ordering (A24) requires serial POSTs, not a serial store: kick
           // off the next range's task before persisting this range's progress

@@ -3,7 +3,7 @@ package graft.ingest
 import graft.TestSpark
 import graft.api.{IngestRequest, IngestionState}
 import graft.canon.Identity
-import graft.receiver.MockPimCore
+import graft.receiver.{MockPimCore, RecordingPimCore}
 import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
 import java.nio.file.Files
@@ -102,6 +102,64 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mock.receivedChunks.slice(resumeStart, resumeStart + 3).toSeq ==
       Seq(2L, 3L, 4L))
     assert(result.totalRecords == 50) // monotone across resume (A12)
+    assert(result.state.exists(_.status == IngestionState.Completed))
+  }
+
+  test("resume skips already-ACKed chunks across delivery partitions (A20)") {
+    val receiver = new RecordingPimCore
+    try {
+      // ~24 KB incompressible records: ~5 MB of shuffled chunks, enough that
+      // AQE keeps the chunk sort's range partitions apart instead of
+      // coalescing them into one
+      val rnd = new scala.util.Random(7)
+      val f = Files.createTempFile("graft_resume", ".json")
+      Files.writeString(f, (0 until 200).map { i =>
+        s"""{"id": $i, "pad": "${rnd.alphanumeric.take(24000).mkString}"}"""
+      }.mkString("[\n", ",\n", "\n]"))
+      val req = IngestRequest(f.toString, "json", receiver.url,
+        chunkSizeByRecords = Some(10))
+      // the 12 chunks to skip span more than one delivery partition
+      val parts = IngestionPipeline.buildChunks(IngestionPipeline.scan(spark, req), req)
+        .rdd.map(_.getAs[Long]("chunk_number")).glom().collect()
+      assert(parts.flatten.sorted.toSeq == (0L until 20L))
+      assert(parts.count(_.exists(_ <= 11L)) >= 2, parts.map(_.toSeq).toSeq)
+
+      val store = IngestionStateStore.inMemory()
+      receiver.mock.rejectChunk(12, times = 3)
+      intercept[Exception] { IngestionPipeline.run(spark, req, store) }
+      val id = resumeId(f.toString)
+      assert(store.lastChunk(id) == 11L)
+      val firstRun = receiver.posts(id).size
+
+      val result = IngestionPipeline.run(spark, req, store)
+      assert(result.chunksSkipped == 12)
+      assert(result.chunksSent == 8)
+      assert(result.totalRecords == 200)
+      // chunks 12..19 POST once each, in order; nothing <= 11 goes out again
+      val resumed = receiver.posts(id).drop(firstRun)
+      assert(resumed.map(_.chunkNumber) == (12L until 20L))
+      assert(resumed.forall(_.ack))
+    } finally receiver.stop()
+  }
+
+  test("retries pause between attempts; a twice-NACKed chunk still lands (A18)") {
+    val pauses = OrderedAckHttpSink.RetryPausesMs.take(2).sum
+    val rec = """{"k":1}"""
+    val iid = Identity.ingestionId("e" * 64, System.nanoTime().toString)
+    mock.rejectChunk(0, times = 2)
+    val t0 = System.nanoTime()
+    new OrderedAckHttpSink(url).sendChunk(iid, 0, Identity.chunkId(iid, 0),
+      Identity.sha256Hex(s"[$rec]"), Seq(rec), isLast = false)
+    assert((System.nanoTime() - t0) / 1000000L >= pauses)
+    assert(mock.lastChunkPerIngestion.get(iid).contains(0L))
+
+    val file = freshFile()
+    val store = IngestionStateStore.inMemory()
+    mock.rejectChunk(2, times = 2)
+    val t1 = System.nanoTime()
+    val result = IngestionPipeline.run(spark, request(file), store)
+    assert((System.nanoTime() - t1) / 1000000L >= pauses)
+    assert(result.chunksSent == 5 && result.totalRecords == 50)
     assert(result.state.exists(_.status == IngestionState.Completed))
   }
 
