@@ -77,20 +77,12 @@ object EdgePin {
       val dt = (System.nanoTime() - t0) / 1e9
       buildS.merge(kind, (dt, 1),
         (a, b) => (a._1 + b._1, a._2 + b._2))
-      val ids = GraftSql.checkpointRddIds(df).toSet
-      // operators release their superseded per-round checkpoints by
-      // walking plan leaves — a walk that can reach this pin through an
-      // un-truncated lineage; register the pin as off-limits to that walk
-      GraftSql.protectBlocks(ids)
-      cache.put(key, Entry(df, ids))
+      cache.put(key, Entry(df, GraftSql.checkpointRddIds(df).toSet))
       df
     }
   }
 
-  private def drop(e: Entry): Unit = {
-    GraftSql.unprotectBlocks(e.ids)
-    GraftSql.releaseCheckpointBlocks(e.df)
-  }
+  private def drop(e: Entry): Unit = GraftSql.releaseCheckpointBlocks(e.df)
 
   /** Release every pinned layout (session lifecycle boundary — end of a
     * bench sweep / verify dump, or tests that need a clean slate). */

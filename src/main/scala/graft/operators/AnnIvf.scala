@@ -105,24 +105,22 @@ object AnnIvf {
       init: Array[Seq[Double]], iterations: Int): Array[Seq[Double]] = {
     require(corpus.columns.contains("vec_id"),
       "distributed centroid training requires a unique vec_id column")
-    var cdf = centroidFrame(corpus.sparkSession, init).localCheckpoint()
-    for (_ <- 1 to iterations) {
+    val cdf0 = centroidFrame(corpus.sparkSession, init).localCheckpoint()
+    val cdf = RoundLoop.fixed(cdf0, iterations) { cdf =>
       val means = assignCellsJoinFrame(corpus, cdf)
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("n"),
           graft.functions.VectorSumAgg.of(col("v")).as("sums"))
         .select(col("cell"),
           transform(col("sums"), x => x / col("n")).as("mean"))
-      val prev = cdf
-      cdf = cdf.join(means, Seq("cell"), "left")
+      cdf.join(means, Seq("cell"), "left")
         .select(col("cell"), coalesce(col("mean"), col("cv")).as("cv"))
         .withColumn("cc", dotProduct(col("cv"), col("cv")))
-        .localCheckpoint()
-      org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(prev)
     }
     val out = cdf.orderBy(col("cell"))
       .select(col("cv")).collect().map(_.getSeq[Double](0))
-    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(cdf)
+    Seq(cdf0, cdf).distinct
+      .foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
     out
   }
 

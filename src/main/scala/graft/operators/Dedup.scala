@@ -165,7 +165,6 @@ object Dedup {
     */
   def connectedComponents(edges: DataFrame, vertices: DataFrame,
       maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
     // hash-partition on dst BEFORE the checkpoint: LogicalRDD preserves the
     // physical partitioning, so the per-round join on dst shuffles only the
     // label frame, never the edge set again
@@ -174,31 +173,6 @@ object Dedup {
       .filter(col("src") =!= col("dst"))
       .distinct().repartition(col("dst")).localCheckpoint()
 
-    // One round = ONE job: the (id, label, changed) frame materializes into
-    // a persisted InternalRow RDD while a changed-count accumulator rides
-    // along — no separate convergence-scan job per round. Accumulator
-    // at-least-once semantics are sound here: a retried task can only
-    // overcount, never turn a genuine change into zero, and zero is the
-    // only value that stops the loop. Convergence = no label changed in the
-    // round (neighbor-min fixpoint; the jump is idempotent at fixpoint).
-    val changedOrd = 2 // column position of `changed` in the round output
-    def materialize(round: DataFrame)
-        : (DataFrame, org.apache.spark.rdd.RDD[_], Long) = {
-      val acc = spark.sparkContext.longAccumulator("cc_changed")
-      val rdd = org.apache.spark.sql.GraftSql.toInternalRdd(round)
-        .mapPartitions { it =>
-          it.map { row =>
-            if (row.getBoolean(changedOrd)) acc.add(1L)
-            row.copy() // unsafe rows are buffer-backed; copy before caching
-          }
-        }
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      rdd.count() // materializes the round; accumulator is valid after this
-      val df = org.apache.spark.sql.GraftSql
-        .internalCreateDataFrame(spark, rdd, round.schema)
-        .select(col("id"), col("label"))
-      (df, rdd, acc.value)
-    }
     // pointer jump: label''(v) = label'(label'(v)) — compresses chains so
     // long paths converge in O(log diameter) rounds, not O(diameter)
     def jump(stepped: DataFrame): DataFrame = stepped
@@ -210,55 +184,42 @@ object Dedup {
     // at all — min(v, min of neighbor ids) straight off the edge set. Also
     // subsumes the separate label-init pass (edge-endpoint nodes only — in
     // a dedup graph most docs are singletons with nothing to propagate;
-    // they attach as their own cluster in the final left join).
+    // they attach as their own cluster in the final left join). It stays
+    // lazy and materializes inside the first looped round's job.
     val first = jump(
       sym.select(col("src").as("id"), least(col("src"), col("dst")).as("label"))
         .groupBy(col("id"))
         .agg(min(col("label")).as("label"), min(col("id")).as("olabel")))
-      .select(col("id"), col("label"),
-        // round 1 "changed" iff the node's label left its own id
-        not(col("label") <=> col("olabel")).as("changed"))
-    var (labels, pinned, changed) = materialize(first)
-    var iter = 1
-    while (changed > 0 && iter < maxIter) {
-      // neighbor min: label'(v) = min(label(v), min over labels of Γ(v)) —
-      // one union + aggregation: each edge (v,u) contributes u's label to
-      // v, each node contributes its own label (tagged via olabel so the
-      // same aggregation also recovers the round-start label for the
-      // change check), min collapses both in a single shuffle on id
-      val labelT = labels.schema("label").dataType
-      val stepped = sym
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
-        .select(col("src").as("id"), col("label"),
-          lit(null).cast(labelT).as("olabel"))
-        .unionByName(labels.withColumn("olabel", col("label")))
-        .groupBy(col("id"))
-        .agg(min(col("label")).as("label"), min(col("olabel")).as("olabel"))
-      val round = jump(stepped)
-        .select(col("id"), col("label"),
-          not(col("label") <=> col("olabel")).as("changed"))
-      val (nextLabels, nextPinned, nextChanged) = materialize(round)
-      // the previous round's blocks are dead once this round materialized
-      pinned.unpersist(blocking = false)
-      labels = nextLabels
-      pinned = nextPinned
-      changed = nextChanged
-      iter += 1
+      .select(col("id"), col("label"))
+    // Convergence = no label changed in the round (neighbor-min fixpoint;
+    // the jump is idempotent at fixpoint). `maxIter` caps the rounds after
+    // the specialized first one.
+    val labels = RoundLoop.untilStable("connectedComponents", first, maxIter) {
+      labels =>
+        // neighbor min: label'(v) = min(label(v), min over labels of Γ(v)) —
+        // one union + aggregation: each edge (v,u) contributes u's label to
+        // v, each node contributes its own label (tagged via olabel so the
+        // same aggregation also recovers the round-start label for the
+        // change check), min collapses both in a single shuffle on id
+        val labelT = labels.schema("label").dataType
+        val stepped = sym
+          .join(labels.select(col("id").as("dst"), col("label")), "dst")
+          .select(col("src").as("id"), col("label"),
+            lit(null).cast(labelT).as("olabel"))
+          .unionByName(labels.withColumn("olabel", col("label")))
+          .groupBy(col("id"))
+          .agg(min(col("label")).as("label"), min(col("olabel")).as("olabel"))
+        jump(stepped)
+          .select(col("id"), col("label"),
+            not(col("label") <=> col("olabel")).as("changed"))
     }
-    // the loop is done: the edge checkpoint is dead weight from here on —
-    // release its blocks eagerly instead of leaking them for the session
-    // lifetime (a long-lived session running many CC queries otherwise
-    // accumulates pinned edge frames until the heap GC-thrashes). Checkpoint
-    // blocks are RDD-persisted, not CacheManager-cached, so they must be
-    // released through the plan's LogicalRDD — Dataset.unpersist is a no-op
-    // for them.
     val result = vertices.select(col("id")).distinct()
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("label"), col("id")).as("cluster_id"))
       // pin the small (id, cluster_id) frame so the big inputs can go
       .localCheckpoint()
     org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(sym)
-    pinned.unpersist(blocking = false)
+    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(labels)
     result
   }
 
@@ -739,31 +700,25 @@ object Dedup {
     * schema is unchanged. */
   def resolveKeepers(decisions: DataFrame): DataFrame = {
     val dec = decisions.localCheckpoint()
-    var pinned = dec.filter(col("status") === "dropped")
-      .select(col("vec_id"), col("cell"), col("keeper")).localCheckpoint()
-    var drops = pinned
-    var changed = drops.limit(1).count() // skip the loop when nothing dropped
-    while (changed > 0) {
+    // keeper ids strictly decrease along a chain of longs, so a chain has
+    // fewer than 2^64 links: doubling resolves it within 64 rounds, and
+    // one more round confirms the fixpoint
+    val drops = RoundLoop.untilStable("resolveKeepers",
+        dec.filter(col("status") === "dropped")
+          .select(col("vec_id"), col("cell"), col("keeper")), 65) { drops =>
       val ptr = drops.select(col("vec_id").as("p_id"), col("keeper").as("p_keeper"))
       // keeper found in the dropped map → forward to that row's keeper
-      val step = drops.join(ptr, col("keeper") === col("p_id"), "left")
+      drops.join(ptr, col("keeper") === col("p_id"), "left")
         .select(col("vec_id"), col("cell"),
           coalesce(col("p_keeper"), col("keeper")).as("keeper"),
-          col("p_keeper").isNotNull.as("fwd"))
-        .localCheckpoint()
-      changed = step.filter(col("fwd")).limit(1).count()
-      // superseded round: checkpoint blocks are RDD-persisted, so release
-      // them through the plan (Dataset.unpersist would be a no-op here)
-      org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(pinned)
-      pinned = step
-      drops = step.select(col("vec_id"), col("cell"), col("keeper"))
+          col("p_keeper").isNotNull.as("changed"))
     }
     val result = dec.filter(col("status") === "kept")
       .unionByName(drops.withColumn("status", lit("dropped"))
         .select(col("vec_id"), col("cell"), col("status"), col("keeper")))
       .localCheckpoint() // materialize before releasing the inputs
     org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(dec)
-    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(pinned)
+    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(drops)
     result
   }
 

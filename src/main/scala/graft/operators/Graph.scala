@@ -145,8 +145,7 @@ object Graph {
     // (optimizer-time/stack bomb at 20+) — so lineage truncates every
     // LineageEvery steps, and the loop-invariant e/outdeg/nodes are
     // checkpointed ONCE up front so each truncation job re-reads
-    // node/edge-sized blocks instead of rescanning the source. Superseded
-    // rank checkpoints are released as soon as the next lands.
+    // node/edge-sized blocks instead of rescanning the source.
     val LineageEvery = 8
     val longRun = iterations > LineageEvery
     def pin(df: DataFrame): DataFrame = if (longRun) df.localCheckpoint() else df
@@ -154,31 +153,27 @@ object Graph {
     // symmetric contract: node domain == outdeg keys (no union+distinct)
     val nodes = pin(outdeg.select(col("src").as("node")))
     val nRow = broadcast(nodes.agg(count(lit(1)).as("n")))
-    var ranks = nodes.crossJoin(nRow)
-      .select(col("node"), (lit(1.0) / col("n")).as("rank"))
-    var lastCp: Option[DataFrame] = None
-    for (i <- 1 to iterations) {
-      // symmetric contract: every node is some edge's dst, so this
-      // grouped sum already covers the full node domain — apply the
-      // teleport term directly (the old nodes-LEFT-JOIN here always
-      // matched and its coalesce never fired; same doubles, two fewer
-      // node-domain joins + one fewer broadcast per iteration)
-      ranks = ew
-        .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("rank") / col("outdeg")).as("in_sum"))
-        .crossJoin(nRow)
-        .select(col("node"),
-          ((lit(1.0) - lit(damping)) / col("n") +
-            lit(damping) * col("in_sum")).as("rank"))
-      if (longRun && i % LineageEvery == 0 && i < iterations) {
-        val cp = ranks.localCheckpoint()
-        lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-        lastCp = Some(cp)
-        ranks = cp
+    // symmetric contract: every node is some edge's dst, so the grouped
+    // sum already covers the full node domain — apply the teleport term
+    // directly, with no node-domain join per step
+    def powerSteps(ranks: DataFrame, n: Int): DataFrame =
+      (1 to n).foldLeft(ranks) { (r, _) =>
+        ew.join(r.withColumnRenamed("node", "src"), Seq("src"))
+          .groupBy(col("dst").as("node"))
+          .agg(sum(col("rank") / col("outdeg")).as("in_sum"))
+          .crossJoin(nRow)
+          .select(col("node"),
+            ((lit(1.0) - lit(damping)) / col("n") +
+              lit(damping) * col("in_sum")).as("rank"))
       }
-    }
-    ranks.crossJoin(nRow)
+    // checkpoints after every full LineageEvery steps short of the last
+    // step; a short chain (q123's 5) truncates nowhere and stays lazy
+    val truncations = (iterations - 1) / LineageEvery
+    val truncated = RoundLoop.fixed(
+      nodes.crossJoin(nRow).select(col("node"), (lit(1.0) / col("n")).as("rank")),
+      truncations)(powerSteps(_, LineageEvery))
+    powerSteps(truncated, iterations - truncations * LineageEvery)
+      .crossJoin(nRow)
       .select(col("node"), (col("rank") * col("n")).as("rank_scaled"))
   }
 
@@ -709,12 +704,7 @@ object Graph {
     val e = if (inputDistinct) edges.select(col("src"), col("dst"))
       else edges.select(col("src"), col("dst")).distinct()
     val nodes = e.select(col("src").as("node")).distinct()
-    var labels = nodes.withColumn("lbl", col("node"))
-    // release targets are ONLY the rounds this loop checkpointed — the
-    // round-1 seed frame is un-checkpointed, and walking ITS full lineage
-    // would reach the caller's leaves (e.g. a pinned EdgePin layout)
-    var lastCp: Option[DataFrame] = None
-    for (_ <- 1 to rounds) {
+    RoundLoop.fixed(nodes.withColumn("lbl", col("node")), rounds) { labels =>
       val counts = e
         .join(labels.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node"), col("lbl"))
@@ -722,16 +712,9 @@ object Graph {
       val best = counts.groupBy(col("node"))
         .agg(min(struct((-col("cnt")).as("neg"), col("lbl").as("l")))
           .getField("l").as("new_lbl"))
-      labels = labels.join(best, Seq("node"), "left")
+      labels.join(best, Seq("node"), "left")
         .select(col("node"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-        .localCheckpoint()
-      // the superseded round's checkpoint blocks are dead the moment the
-      // new one materializes — release them (the Dedup/AnnIvf loop
-      // discipline) so memory stays O(1 round), not O(rounds)
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(labels)
     }
-    labels
   }
 
   private def q153(s: SparkSession, dir: String): DataFrame = {
@@ -856,8 +839,8 @@ object Graph {
   // min-degree nodes one at a time; useless distributed).
   //
   // Round shape = the LPA/PageRank discipline: one edge-side hash join
-  // (estimate lookup by src), one per-node h-index, one join back; lineage
-  // truncates per round with superseded blocks released. The h-index is
+  // (estimate lookup by src), one per-node h-index, one join back, one
+  // [[RoundLoop]] checkpoint per round. The h-index is
   // computed on the per-node ESTIMATE HISTOGRAM, not the raw neighbor
   // rows: h = max over distinct estimate values e of min(e, #neighbors
   // with est ≥ e), so the map-side-combined (node, est) count shrinks the
@@ -877,9 +860,9 @@ object Graph {
   //    bounded-cost estimator, and the form a static SQL oracle can
   //    replay round-for-round (q185; non-converged runs still
   //    hash-match because both engines run the identical count).
-  //  - [[kCoreExact]]: iterate to the FIXPOINT with one scalar
-  //    changed-row count collected per round (the trainBpeMerges
-  //    discipline) — the production path. Convergence needs O(longest
+  //  - [[kCoreExact]]: iterate to the FIXPOINT, the changed-row count
+  //    taken inside each round's checkpoint job ([[RoundLoop.untilStable]])
+  //    — the production path. Convergence needs O(longest
   //    estimate-dependency chain) rounds, which is graph-dependent (the
   //    q185 co-order graph at sf0.1 takes 18; its 1-in-7 sparser slice
   //    takes 22 — sparser can be SLOWER, chains lengthen), so a fixed
@@ -908,43 +891,33 @@ object Graph {
     * numbers, exact once converged (see [[kCoreExact]]). */
   def kCoreDecomposition(edges: DataFrame, rounds: Int,
       inputDistinct: Boolean = false): DataFrame = {
+    require(rounds >= 1, s"kCoreDecomposition needs >= 1 round, got $rounds")
     val e = if (inputDistinct) edges.select(col("src"), col("dst"))
       else edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var est = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).cast("long").as("est"))
-    var lastCp: Option[DataFrame] = None
-    for (_ <- 1 to rounds) {
-      val prev = est
-      est = prev.join(hIndexRound(e, prev), Seq("node"))
+    val est = RoundLoop.fixed(degrees(e), rounds) { prev =>
+      prev.join(hIndexRound(e, prev), Seq("node"))
         .select(col("node"), least(col("est"), col("h")).as("est"))
-        .localCheckpoint()
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(est)
     }
+    if (!inputDistinct) org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
     est.select(col("node"), col("est").as("core"))
   }
 
-  /** Exact core numbers: h-index iteration run to its fixpoint, detected
-    * by one scalar changed-row count per round (bounded driver traffic).
-    * `maxRounds` is a safety valve, not a tuning knob. */
+  /** Round-0 estimate: every node's degree. */
+  private def degrees(e: DataFrame): DataFrame =
+    e.groupBy(col("src").as("node")).agg(count(lit(1)).cast("long").as("est"))
+
+  /** Exact core numbers: h-index iteration run to its fixpoint, the
+    * changed-row count taken inside each round's checkpoint job. Fails if
+    * `maxRounds` pass without convergence — a safety valve, not a tuning
+    * knob. */
   def kCoreExact(edges: DataFrame, maxRounds: Int = 1000): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var est = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).cast("long").as("est")).localCheckpoint()
-    var lastCp: Option[DataFrame] = Some(est)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      round += 1
-      val next = est.join(hIndexRound(e, est), Seq("node"))
-        .select(col("node"), least(col("est"), col("h")).as("est2"),
-          col("est"))
-        .localCheckpoint()
-      changed = next.filter(col("est2") < col("est")).count()
-      est = next.select(col("node"), col("est2").as("est"))
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(next)
+    val est = RoundLoop.untilStable("kCoreExact", degrees(e), maxRounds) { prev =>
+      prev.join(hIndexRound(e, prev), Seq("node"))
+        .select(col("node"), least(col("est"), col("h")).as("est"),
+          (col("h") < col("est")).as("changed"))
     }
+    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
     est.select(col("node"), col("est").as("core"))
   }
 
@@ -1004,9 +977,8 @@ object Graph {
   //    Martin: S₀(v) = sketch{v}; S_r(u) = S_{r-1}(u) ∪ ⋃_{v∈adj(u)}
   //    S_{r-1}(v); N(u, r) ≈ estimate(S_r(u)). State is O(nodes) fixed-
   //    width sketches per round regardless of reach-set size — the 100 TB
-  //    path (r rounds × one edge join + one hll_union_agg each; the
-  //    superseded round's checkpoint blocks release, the k-core
-  //    discipline). Sketch unions are order-insensitive and the md5-free
+  //    path (r rounds × one edge join + one hll_union_agg each). Sketch
+  //    unions are order-insensitive and the md5-free
   //    HLL registers are deterministic for a given value set, so the
   //    estimates are stable under repartitioning — spec-gated against the
   //    exact form (the oracle cannot replay Datasketches registers).
@@ -1054,28 +1026,29 @@ object Graph {
     * depth. `lgK` is the Datasketches lgConfigK accuracy knob. */
   def anf(edges: DataFrame, rounds: Int, lgK: Int = 12): DataFrame = {
     val e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var state = e.select(col("src").as("node"))
+    // the state carries each node's estimates so far (`ests`, one per hop)
+    // next to its sketch, so every hop's estimate lands in that round's
+    // checkpoint. Every node is in the state by hop 1 (srcs from the
+    // start, dsts as neighbors), so position i of `ests` is hop i + 1.
+    val noEsts = typedLit(Array.empty[Long])
+    val init = e.select(col("src").as("node"))
       .groupBy(col("node"))
       .agg(hll_sketch_agg(col("node"), lit(lgK)).as("sk"))
-      .localCheckpoint()
-    var lastCp: Option[DataFrame] = Some(state)
-    val perHop = (1 to rounds).map { hop =>
+      .withColumn("ests", noEsts)
+    val last = RoundLoop.fixed(init, rounds) { state =>
       val nbr = e.join(state.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), col("sk"))
-      state = nbr.unionByName(state)
-        .groupBy(col("node")).agg(hll_union_agg(col("sk")).as("sk"))
-        .localCheckpoint()
-      // pin the O(nodes) estimate rows BEFORE the sketch state they derive
-      // from is released (estimate counts the node itself; −1 = reach_r)
-      val est = state.select(col("node"), lit(hop).as("hop"),
-        (hll_sketch_estimate(col("sk")) - lit(1L)).as("est"))
-        .localCheckpoint()
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(state)
-      est
+        .select(col("dst").as("node"), col("sk"),
+          lit(null).cast("array<bigint>").as("ests"))
+      nbr.unionByName(state)
+        .groupBy(col("node"))
+        .agg(hll_union_agg(col("sk")).as("sk"), max(col("ests")).as("ests"))
+        // the estimate counts the node itself; −1 = reach_r
+        .withColumn("ests", concat(coalesce(col("ests"), noEsts),
+          array(hll_sketch_estimate(col("sk")) - lit(1L))))
     }
-    lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-    perHop.reduce(_ unionByName _)
+    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
+    last.select(col("node"), posexplode(col("ests")))
+      .select(col("node"), (col("pos") + 1).as("hop"), col("col").as("est"))
   }
 
   // same ⅓-sliced part co-order graph as q134/q153/q185; exact ≤2-hop
@@ -1118,7 +1091,7 @@ object Graph {
   // and deeper nodes are simply absent: a fixed-round contract a static
   // oracle replays round-for-round, like q185's. Round shape is the
   // PageRank/k-core discipline — one edge hash-join + one min-combine per
-  // round, lineage truncated, superseded blocks released. Min-plus is
+  // round. Min-plus is
   // idempotent, so extra rounds past the eccentricity are no-ops (the
   // fixpoint form would add the kCoreExact changed-count loop unchanged).
 
@@ -1128,20 +1101,23 @@ object Graph {
       rounds: Int, inputDistinct: Boolean = false): DataFrame = {
     val e = if (inputDistinct) edges.select(col("src"), col("dst"))
       else edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var state = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var lastCp: Option[DataFrame] = Some(state)
-    for (_ <- 1 to rounds) {
-      val hop = e.join(state.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + 1L).as("dist"))
-      state = state.unionByName(hop)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(state)
-    }
+    val state = minPlusRounds(e, seeds, rounds, lit(1L))
+    if (!inputDistinct) org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
     state
   }
+
+  /** `rounds` min-plus relaxations from `seeds` (dist 0) over edges `e`,
+    * each hop costing `cost` (a column of `e`, or a constant). */
+  private def minPlusRounds(e: DataFrame, seeds: DataFrame, rounds: Int,
+      cost: org.apache.spark.sql.Column): DataFrame =
+    RoundLoop.fixed(
+      seeds.select(col("node")).distinct().withColumn("dist", lit(0L)),
+      rounds) { state =>
+      val hop = e.join(state.withColumnRenamed("node", "src"), Seq("src"))
+        .select(col("dst").as("node"), (col("dist") + cost).as("dist"))
+      state.unionByName(hop)
+        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }
 
   // co-order slice; seeds = every 97th part id — distance-to-seed-core
   // histogram after 4 rounds (exact for the ≤4-hop shells it reports)
@@ -1205,7 +1181,7 @@ object Graph {
     // ONLY auth (hub stays a 1-join lazy view over the pinned auth; its
     // second reference re-runs one broadcast join) measures 6.2s vs 8.8s
     // both-pinned vs 12–20s unpinned at sf0.1 local[8]. Node-domain
-    // blocks only; superseded checkpoints released per round.
+    // blocks only.
     //
     // Round 13, both-sides-large regime only (the q123 broadcast-
     // threshold signal — when hub/auth vectors broadcast, the edge side
@@ -1235,30 +1211,29 @@ object Graph {
     val eBySrc = if (pinLayout) org.apache.spark.sql.GraftSql
       .pinHashPartitioned(e, Seq("src"), conf.numShufflePartitions) else e
     // release our intermediate checkpoint once both pinned layouts land;
-    // a pin-backed input has no intermediate copy (its blocks are
-    // protected session state — the walk would skip them anyway)
+    // a pin-backed input has no intermediate copy
     if (pinLayout && !inputDistinct)
       org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
-    val dsts = eByDst.select(col("dst").as("node")).distinct()
-    var auth = dsts.withColumn("a", lit(1.0))
-    var hub: DataFrame = null
-    // release lags ONE extra round: the lazy hub view still reads the
-    // PREVIOUS auth checkpoint until the next round (or the post-loop hub
-    // pin) materializes past it
-    var cps: Seq[DataFrame] = Nil
-    for (_ <- 1 to iterations) {
-      hub = eByDst.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
+    def hubOf(auth: DataFrame): DataFrame =
+      eByDst.join(auth.withColumnRenamed("node", "dst"), Seq("dst"))
         .groupBy(col("src").as("node")).agg(sum(col("a")).as("h"))
-      auth = eBySrc.join(hub.withColumnRenamed("node", "src"), Seq("src"))
+    def authOf(hub: DataFrame): DataFrame =
+      eBySrc.join(hub.withColumnRenamed("node", "src"), Seq("src"))
         .groupBy(col("dst").as("node")).agg(sum(col("h")).as("a"))
-        .localCheckpoint()
-      if (cps.length == 2) {
-        org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(cps.head)
-        cps = cps.tail
-      }
-      cps = cps :+ auth
-    }
-    hub = hub.localCheckpoint()
+    val auth0 = eByDst.select(col("dst").as("node")).distinct()
+      .withColumn("a", lit(1.0))
+    // the last power step runs outside the loop: the render reads its hub
+    // as well as its auth, so that hub is pinned from the previous auth
+    // before the loop's last checkpoint is released
+    val prevAuth = RoundLoop.fixed(auth0, iterations - 1)(a => authOf(hubOf(a)))
+    val hub = hubOf(prevAuth).localCheckpoint()
+    val auth = authOf(hub).localCheckpoint()
+    if (iterations > 1)
+      org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(prevAuth)
+    // this call's own edge copies are dead once both vectors are pinned
+    val ownEdges = if (pinLayout) Seq(eByDst, eBySrc)
+      else if (inputDistinct) Nil else Seq(e)
+    ownEdges.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
     val ha = broadcast(hub.agg(sum(col("h")).as("hs")))
     val aa = broadcast(auth.agg(sum(col("a")).as("as")))
     hub.crossJoin(ha).select(col("node"), (col("h") / col("hs")).as("score"),
@@ -1471,27 +1446,16 @@ object Graph {
   // weights — bounded-round Bellman–Ford, the same min-plus induction
   // contract as q209 (exact for every path of ≤ `rounds` hops; absent
   // nodes are farther in hops). Per round ONE edge join + one
-  // map-side-combined min per node, checkpoint-truncated with superseded
-  // block release; weights are exact integer cents, so distances compare
-  // exactly — no float tie at any frontier.
+  // map-side-combined min per node; weights are exact integer cents, so
+  // distances compare exactly — no float tie at any frontier.
 
   /** (node, dist) after `rounds` min-plus steps over weighted (src, dst,
     * w) edges from `seeds` (node). */
   def weightedDistances(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val e = edges.select(col("src"), col("dst"), col("w")).localCheckpoint()
-    var state = seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint()
-    var lastCp: Option[DataFrame] = Some(state)
-    for (_ <- 1 to rounds) {
-      val hop = e.join(state.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      state = state.unionByName(hop)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      lastCp.foreach(org.apache.spark.sql.GraftSql.releaseCheckpointBlocks)
-      lastCp = Some(state)
-    }
+    val state = minPlusRounds(e, seeds, rounds, col("w"))
+    org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e)
     state
   }
 
@@ -1558,8 +1522,7 @@ object Graph {
   // degree. Bounded-round contract (the q185 fixed-round form): `rounds`
   // peels give a SUPERSET of the true truss, exact when converged —
   // both engines run exactly the same rounds, so results match
-  // regardless. Pure integer counting end-to-end; per-round
-  // localCheckpoint keeps lineage flat (the q153 discipline).
+  // regardless. Pure integer counting end-to-end.
 
   /** Canonical per-edge triangle support: (a, b, support) for a < b. */
   private def edgeSupport(e: DataFrame): DataFrame = {
@@ -1605,17 +1568,17 @@ object Graph {
     // inputCanonical (pinned, materialized a<b face): round 0 reads the
     // pin's blocks directly — no canonicalize/dedup exchange, no extra
     // checkpoint copy; every later round checkpoints its peel as before
-    var e = if (inputCanonical) edges.select(col("a"), col("b")) else edges
+    val e0 = if (inputCanonical) edges.select(col("a"), col("b")) else edges
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
       .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      e = e.join(edgeSupport(e), Seq("a", "b"), "left")
+    val e = RoundLoop.fixed(e0, rounds) { prev =>
+      prev.join(edgeSupport(prev), Seq("a", "b"), "left")
         .filter(coalesce(col("support"), lit(0L)) >= (k - 2).toLong)
         .select(col("a"), col("b"))
-        .localCheckpoint()
     }
+    if (!inputCanonical) org.apache.spark.sql.GraftSql.releaseCheckpointBlocks(e0)
     e.join(edgeSupport(e), Seq("a", "b"), "left")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))

@@ -38,8 +38,8 @@ object GraftSql {
     * InternalRow blocks eagerly, and republish them as a [[execution
     * .LogicalRDD]] that ADVERTISES HashPartitioning(keys) + ascending
     * order — every downstream equi-join on `keys` then plans with zero
-    * exchange and zero sort on this side. Blocks release through the
-    * same [[releaseCheckpointBlocks]] walk as ordinary checkpoints. */
+    * exchange and zero sort on this side. Blocks release through
+    * [[releaseCheckpointBlocks]], like ordinary checkpoints. */
   def pinHashPartitioned(df: DataFrame, keys: Seq[String],
       numParts: Int): DataFrame = {
     require(keys.nonEmpty && numParts > 0)
@@ -69,37 +69,24 @@ object GraftSql {
         isStreaming = false, stream = None)(spark, None, None))
   }
 
-  /** Releases the storage blocks behind a `localCheckpoint()`ed Dataset.
+  /** Releases the storage blocks of a checkpoint the caller owns.
     *
     * `Dataset.unpersist` only uncaches through the CacheManager; checkpoint
-    * blocks live as persisted RDDs inside the plan's [[execution.LogicalRDD]]
-    * leaves, which the CacheManager never sees — so iterative operators that
-    * checkpoint per round (connected components, keeper-chain resolution)
-    * would pin every superseded round until the session ends. This walks the
-    * analyzed plan and unpersists each LogicalRDD's RDD directly. Only call
-    * once nothing will re-read the frame (i.e. after the successor round or
-    * the final result has materialized). */
-  /** RDD ids that [[releaseCheckpointBlocks]] must never unpersist —
-    * session-scoped pinned layouts (graft.EdgePin) that outlive query
-    * lifecycles. Needed because a release target that is NOT itself
-    * checkpointed (e.g. a loop's round-1 seed frame) has a full lineage
-    * whose LEAVES can include a pinned layout's LogicalRDD — the walk
-    * would otherwise kill the shared pin mid-session. */
-  @volatile private var protectedIds: Set[Int] = Set.empty
-  def protectBlocks(ids: Set[Int]): Unit = synchronized {
-    protectedIds = protectedIds ++ ids
-  }
-  def unprotectBlocks(ids: Set[Int]): Unit = synchronized {
-    protectedIds = protectedIds -- ids
-  }
-
+    * blocks live as persisted RDDs inside a [[execution.LogicalRDD]], which
+    * the CacheManager never sees, so a loop that checkpoints per round
+    * would pin every superseded round until the session ends. Ownership
+    * rule: `ds` must BE the checkpoint (the frame `localCheckpoint`,
+    * [[pinHashPartitioned]] or [[internalCreateDataFrame]] returned, whose
+    * analyzed plan is a single LogicalRDD). A frame derived from one fails
+    * the `require`: its leaves may be blocks someone else owns, such as a
+    * session-scoped pinned layout. Call it only once nothing will re-read
+    * the frame. */
   def releaseCheckpointBlocks(ds: Dataset[_]): Unit = {
-    val keep = protectedIds
-    ds.queryExecution.analyzed.foreach {
-      case lr: execution.LogicalRDD if !keep(lr.rdd.id) =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
+    val plan = ds.queryExecution.analyzed
+    require(plan.isInstanceOf[execution.LogicalRDD],
+      s"releaseCheckpointBlocks takes a checkpoint itself, not a frame " +
+        s"derived from one:\n$plan")
+    plan.asInstanceOf[execution.LogicalRDD].rdd.unpersist(blocking = false)
   }
 
   /** Ids of the persisted RDDs behind a checkpointed Dataset's LogicalRDD

@@ -4,7 +4,8 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** PageRank and k-fold assignment laws (round 7, B74/B75). */
+/** Graph operator laws: PageRank, k-fold assignment, triangles, LPA,
+  * k-core, neighborhood profiles, BFS, HITS and Adamic–Adar. */
 class GraphSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -337,5 +338,50 @@ class GraphSpec extends AnyFunSuite {
     val fix = Graph.bfsDistances(edges, seeds, 30).as[(Long, Long)]
       .collect().toMap
     assert(fix == dist)
+  }
+
+  test("hits: star graph — the shared authority takes all authority mass") {
+    // three hubs all point at z; one also points at y
+    val edges = Seq(("a", "z"), ("b", "z"), ("c", "z"), ("a", "y"))
+      .toDF("src", "dst")
+    val got = Graph.hits(edges, iterations = 3)
+      .as[(String, Double, String)].collect()
+      .map(r => (r._3, r._1) -> r._2).toMap
+    // z is cited by every hub; y only by the weakest-boosted one
+    assert(got(("authority", "z")) > got(("authority", "y")))
+    // a cites both top authorities — strictly the best hub
+    assert(got(("hub", "a")) > got(("hub", "b")))
+    assert(math.abs(got(("hub", "b")) - got(("hub", "c"))) < 1e-12) // symmetric
+    // each kind normalizes to 1
+    val sums = Graph.hits(edges, 3).groupBy(col("kind"))
+      .agg(sum(col("score"))).as[(String, Double)].collect().toMap
+    assert(sums.values.forall(s => math.abs(s - 1.0) < 1e-9))
+  }
+
+  test("adamicAdar equals the naive weighted common-neighbor count") {
+    val rnd = new scala.util.Random(41)
+    val rows = Seq.fill(800)((rnd.nextInt(60).toLong, rnd.nextInt(40).toLong))
+    val got = Graph.adamicAdar(rows.toDF("c", "p"), maxDeg = 1000, k = 1000)
+      .as[(Long, Long, Long)].collect().toSet
+    val cp = rows.distinct
+    val deg = cp.groupBy(_._1).map { case (c, v) => c -> v.size }
+    val w = deg.collect { case (c, d) if d >= 2 =>
+      c -> math.floor(1e6 / math.log(d.toDouble)).toLong }
+    val naive = (for {
+      (c, parts) <- cp.groupBy(_._1).toSeq
+      if w.contains(c)
+      ps = parts.map(_._2).sorted
+      i <- ps.indices; j <- (i + 1) until ps.size
+    } yield ((ps(i), ps(j)), w(c)))
+      .groupBy(_._1).map { case ((a, b), v) => (a, b, v.map(_._2).sum) }.toSet
+    assert(got == naive)
+  }
+
+  test("adamicAdar: the maxDeg cap drops super-connectors' pairs") {
+    val rows = (1L to 10L).map(p => (1L, p)) ++ // deg-10 super-connector
+      Seq((2L, 1L), (2L, 2L))
+    val got = Graph.adamicAdar(rows.toDF("c", "p"), maxDeg = 5, k = 100)
+      .as[(Long, Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L, math.floor(1e6 / math.log(2.0)).toLong)))
   }
 }
