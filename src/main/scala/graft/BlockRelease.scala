@@ -23,7 +23,7 @@ object BlockRelease {
   def releaseAll(spark: SparkSession): Unit = {
     val keep = EdgePin.pinnedIds
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep(id)) rdd.unpersist(blocking = false)
+      if (!keep(id)) org.apache.spark.sql.GraftSql.dropBlocks(rdd)
     }
   }
 

@@ -1,11 +1,17 @@
 package graft.chunk
 
+import graft.canon.CanonicalJson
+import java.security.MessageDigest
+import org.apache.commons.codec.binary.Hex
+import org.apache.spark.{Dependency, NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Chunk assignment (SURVEY.md §2 A9–A11): map an ordered record stream onto
   * dense, contiguous, bounded chunks `chunk_number = offset + floor(rn / n)`.
@@ -57,33 +63,200 @@ object ChunkAssigner {
       it.map { case (row, v) => extra.update(0, v); joiner(row, extra): InternalRow }
     }, StructType(df.schema.fields :+ StructField(name, LongType, nullable = false)))
 
-  /** A9/A11: chunk number of row `rn`, `lastChunk + 1 + rn div chunkSize` —
-    * integer `div`, not double `/`: row numbers stay exact past 2^53. */
-  def countChunkNumber(chunkSize: Int, lastChunk: Long): Column = {
-    require(chunkSize >= 1 && chunkSize <= 4000,
-      s"chunk_size_by_records must be in [1, 4000], got $chunkSize") // request_model.py:22
-    lit(lastChunk + 1) + expr(s"rn div $chunkSize")
-  }
-
-  /** A9/A11: count-based chunking in `orderCols` order. */
+  /** A9/A11: count-based chunking in `orderCols` order —
+    * `lastChunk + 1 + rn div chunkSize`, integer `div`, not double `/`: row
+    * numbers stay exact past 2^53. */
   def assignByCount(df: DataFrame, orderCols: Seq[Column], chunkSize: Int,
       lastChunk: Long = -1L): DataFrame = {
-    val chunkNumber = countChunkNumber(chunkSize, lastChunk) // checks first
-    withRowNumber(df, orderCols).withColumn("chunk_number", chunkNumber)
+    val bound = ChunkBound.Records(chunkSize) // checks first
+    withRowNumber(df, orderCols)
+      .withColumn("chunk_number", lit(lastChunk + 1) + expr(s"rn div ${bound.n}"))
   }
 
-  /** A12/A14/A15: per `chunk_number`, `n_records`, the canonical `rec`s in
-    * `rn` order (array_sort of (rn, rec) structs sorts on rn) and their
-    * `checksum`, sha256 of `[` ‖ records joined by `,` ‖ `]`. */
-  def aggregateChunks(chunked: DataFrame): DataFrame =
-    chunked
-      .groupBy(col("chunk_number"))
-      .agg(count(lit(1)).as("n_records"),
-        transform(array_sort(collect_list(struct(col("rn"), col("rec")))),
-          x => x.getField("rec")).as("records"))
-      .withColumn("checksum",
-        sha2(concat(lit("["), array_join(col("records"), ","), lit("]")), 256))
-      .orderBy(col("chunk_number"))
+  /** A12/A14/A15 in one ordered pass: the chunks of `ordered`, whose
+    * partitions hold its records in order, as `(chunk_number, n_records,
+    * records, checksum)` rows numbered from `lastChunk + 1`. Each row of
+    * `ordered` is one record, rendered as the canonical JSON object of its
+    * columns; `checksum` is sha256 of `[` ‖ records joined by `,` ‖ `]`,
+    * hashed as the fold goes, with no joined string.
+    *
+    * Output partition p holds the chunks whose first record is in input
+    * partition p: contiguous ascending chunk ranges in partition order, with
+    * no shuffle. A chunk still open at its partition's end is finished from
+    * the heads of the following partitions (a narrow dependency, like
+    * coalesce's), so only one chunk's rows per boundary are read twice. The
+    * fold state entering each partition comes from one count job in count
+    * mode and from the chained sizes fold, one job per partition, in byte
+    * mode; a one-partition input runs neither. */
+  def chunks(ordered: DataFrame, bound: ChunkBound, lastChunk: Long): DataFrame = {
+    val rows = GraftSql.toInternalRdd(ordered)
+    val schema = ordered.schema
+    val sc = rows.sparkContext
+    val heads = 0 until rows.getNumPartitions - 1 // the last carry is unused
+    val carries = (bound match {
+      case ChunkBound.Records(n) =>
+        val counts = if (heads.isEmpty) Array.empty[Long]
+          else sc.runJob(rows, (it: Iterator[InternalRow]) => {
+            var k = 0L
+            while (it.hasNext) { it.next(); k += 1 }
+            k
+          }, heads)
+        counts.toIndexedSeq.scanLeft(0L)(_ + _).map(seen => Carry(seen, 0L, (seen + n - 1) / n))
+      case ChunkBound.Bytes(_) =>
+        heads.scanLeft(Carry(0L, 0L, 0L)) { (in, p) =>
+          sc.runJob(rows, (it: Iterator[InternalRow]) => {
+            val fold = new Packing(bound, in)
+            it.foreach(r => fold.add(render(r, schema).numBytes))
+            fold.carry
+          }, Seq(p)).head
+        }
+    }).take(rows.getNumPartitions)
+    GraftSql.internalCreateDataFrame(ordered.sparkSession,
+      new ChunkFoldRDD(rows, schema, bound, lastChunk, carries), ChunkSchema)
+  }
+
+  /** A chunk's bound: a record count (A9) or a byte budget packed greedily
+    * (A10: flush BEFORE an append that would pass the budget,
+    * `json_reader.py:133`). */
+  sealed trait ChunkBound extends Serializable
+  object ChunkBound {
+    final case class Records(n: Int) extends ChunkBound {
+      require(n >= 1 && n <= 4000,
+        s"chunk_size_by_records must be in [1, 4000], got $n") // request_model.py:22
+    }
+    final case class Bytes(budget: Long) extends ChunkBound
+  }
+
+  private val ChunkSchema: StructType = StructType(Seq(
+    StructField("chunk_number", LongType, nullable = false),
+    StructField("n_records", LongType, nullable = false),
+    StructField("records", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("checksum", StringType, nullable = false)))
+
+  /** The packing fold's state entering a record: records seen, bytes in the
+    * open chunk, chunks opened so far. */
+  private final case class Carry(rows: Long, bytes: Long, chunks: Long)
+
+  /** A9/A10's packing fold, one record at a time. */
+  private final class Packing(bound: ChunkBound, in: Carry) {
+    private var rows = in.rows
+    private var bytes = in.bytes
+    var chunks: Long = in.chunks
+
+    /** Folds in a record of `size` bytes; true when it opens a chunk. */
+    def add(size: Long): Boolean = {
+      val opens = bound match {
+        case ChunkBound.Records(n) => rows % n == 0
+        case ChunkBound.Bytes(budget) => chunks == 0 || bytes + size > budget
+      }
+      if (opens) { chunks += 1; bytes = 0L }
+      rows += 1
+      bytes += size
+      opens
+    }
+
+    def carry: Carry = Carry(rows, bytes, chunks)
+  }
+
+  private def render(row: InternalRow, schema: StructType): UTF8String = {
+    val sb = new java.lang.StringBuilder(64)
+    CanonicalJson.write(sb, row, schema)
+    UTF8String.fromString(sb.toString)
+  }
+
+  /** One chunk as it fills: its records and their running sha256. */
+  private final class ChunkBuilder(number: Long) {
+    private val digest = MessageDigest.getInstance("SHA-256")
+    private val records = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
+    digest.update('['.toByte)
+
+    def add(rec: UTF8String): Unit = {
+      if (records.nonEmpty) digest.update(','.toByte)
+      digest.update(rec.getBytes)
+      records += rec
+    }
+
+    def result(): InternalRow = {
+      digest.update(']'.toByte)
+      new GenericInternalRow(Array[Any](number, records.size.toLong,
+        new GenericArrayData(records.toArray[Any]),
+        UTF8String.fromString(Hex.encodeHexString(digest.digest()))))
+    }
+  }
+
+  /** Partition p of [[ChunkFoldRDD]]: the input partitions its task reads —
+    * p, then the heads of those up to the next one that opens a chunk; none
+    * when p opens no chunk. */
+  private final class ChunkPartition(val index: Int, val inputs: Seq[Partition])
+    extends Partition
+
+  /** [[chunks]]' fold. `carries(p)` is the fold state entering input
+    * partition p. */
+  private final class ChunkFoldRDD(rows: RDD[InternalRow], schema: StructType,
+      bound: ChunkBound, lastChunk: Long, carries: IndexedSeq[Carry])
+    extends RDD[InternalRow](rows.sparkContext, Nil) {
+
+    private val last = carries.size - 1
+    // an input partition's records open a chunk; the last one's are unknown
+    private def opens(p: Int) = p == last || carries(p + 1).chunks > carries(p).chunks
+    private val inputs: IndexedSeq[Seq[Int]] = carries.indices.map(p =>
+      if (!opens(p)) Nil else p to (p + 1 to last).find(opens).getOrElse(last))
+
+    override protected def getDependencies: Seq[Dependency[_]] =
+      Seq(new NarrowDependency(rows) { def getParents(p: Int): Seq[Int] = inputs(p) })
+
+    override protected def getPartitions: Array[Partition] =
+      Array.tabulate(carries.size)(p => new ChunkPartition(p, inputs(p).map(rows.partitions(_))))
+
+    override def compute(split: Partition, context: TaskContext): Iterator[InternalRow] = {
+      val part = split.asInstanceOf[ChunkPartition]
+      if (part.inputs.isEmpty) return Iterator.empty
+      val read = (q: Partition) => firstParent[InternalRow].iterator(q, context)
+      val own = read(part.inputs.head)
+      val ahead = part.inputs.tail.iterator.flatMap(read)
+      val packing = new Packing(bound, carries(part.index))
+      new Iterator[InternalRow] {
+        private var open: ChunkBuilder = null
+        private var ready: InternalRow = null
+
+        // the next whole chunk: records of this partition before its first
+        // opening record belong to an earlier task's chunk and are skipped
+        private def advance(): InternalRow = {
+          while (own.hasNext) {
+            val rec = render(own.next(), schema)
+            if (packing.add(rec.numBytes)) {
+              val done = open
+              open = new ChunkBuilder(lastChunk + packing.chunks)
+              open.add(rec)
+              if (done != null) return done.result()
+            } else if (open != null) open.add(rec)
+          }
+          if (open == null) return null
+          var closed = false
+          while (!closed && ahead.hasNext) {
+            val rec = render(ahead.next(), schema)
+            closed = packing.add(rec.numBytes)
+            if (!closed) open.add(rec)
+          }
+          val done = open
+          open = null
+          done.result()
+        }
+
+        def hasNext: Boolean = {
+          if (ready == null) ready = advance()
+          ready != null
+        }
+
+        def next(): InternalRow = {
+          if (!hasNext) throw new NoSuchElementException("no more chunks")
+          val r = ready
+          ready = null
+          r
+        }
+      }
+    }
+  }
 
   /** EXCLUSIVE prefix sum of `sizeCol` in `orderCols` order, appended as
     * `outName` — the distributed scan: range-partition + sort (partitions
@@ -130,7 +303,8 @@ object ChunkAssigner {
     * fold runs over a projected `(rn, size)` stream (~16 bytes/row) as K
     * CHAINED MINI-JOBS — one per partition of the range-partitioned pair
     * stream, each folding its slice where the shuffle block lives and
-    * handing a single (openChunkBytes, started) carry to the next. Partition
+    * handing a single [[Carry]] to the next ([[chunks]]' byte mode runs the
+    * same chain over its input partitions). Partition
     * p's rns all precede partition p+1's (rn came from zipWithIndex over
     * these same partitions), so the chained fold IS the global fold; no
     * stage ever runs one task over N rows and no N-row shuffle block exists.
@@ -151,27 +325,20 @@ object ChunkAssigner {
     val pairs = withRn.select(col("__rn"), col("__size").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val sc = df.sparkSession.sparkContext
+    val bound = ChunkBound.Bytes(budgetBytes)
     val startsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var carry = 0L        // bytes in the open chunk entering the next slice
-    var started = false   // false until the very first record is seen
+    var carry = Carry(0L, 0L, 0L) // the fold state entering the next slice
     for (p <- 0 until pairs.getNumPartitions) {
-      val cIn = carry
-      val sIn = started
-      val Array((pStarts, cOut, sOut)) = sc.runJob(pairs,
+      val in = carry
+      val Array((pStarts, out)) = sc.runJob(pairs,
         (it: Iterator[(Long, Long)]) => {
-          var bytes = cIn
-          var st = sIn
+          val fold = new Packing(bound, in)
           val ps = scala.collection.mutable.ArrayBuffer.empty[Long]
-          it.foreach { case (rn, sz) =>
-            if (st && bytes + sz > budgetBytes) { ps += rn; bytes = 0L }
-            st = true
-            bytes += sz
-          }
-          (ps.toArray, bytes, st)
+          it.foreach { case (rn, sz) => if (fold.add(sz) && fold.chunks > 1) ps += rn }
+          (ps.toArray, fold.carry)
         }, Seq(p))
       startsBuf ++= pStarts
-      carry = cOut
-      started = sOut
+      carry = out
     }
     val boundaries: Array[Long] = startsBuf.toArray
     // chunk_number = base + (# chunk-start rns <= rn): distributed, local to

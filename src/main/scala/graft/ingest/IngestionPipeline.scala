@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.api.{IngestRequest, IngestionState}
-import graft.canon.{CanonicalJson, Identity}
+import graft.canon.Identity
 import graft.chunk.ChunkAssigner
 import graft.sink.OrderedAckHttpSink
 import graft.state.IngestionStateStore
@@ -9,13 +9,15 @@ import org.apache.spark.sql.{DataFrame, GraftSql, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-/** End-to-end ingestion (SURVEY.md §3.4): scan → canonical serialize → chunk
-  * → per-chunk checksum agg → ordered ACK-gated delivery → crash-safe resume.
+/** End-to-end ingestion (SURVEY.md §3.4): scan → one ordered fold that
+  * renders, chunks and checksums → ordered ACK-gated delivery → crash-safe
+  * resume.
   *
   * Execution split, designed for the protocol's constraint (§7.4 #1):
-  *   - EXECUTORS (parallel): parse, canonical-JSON render, chunk assignment,
-  *     per-chunk ordered record collection + sha256 — all distributed — and
-  *     the chunk POSTs themselves (`deliverChunksDistributed`);
+  *   - EXECUTORS (parallel): parse, then per input partition one ordered
+  *     fold (canonical-JSON render, chunk assignment, incremental sha256;
+  *     `ChunkAssigner.chunks`, no shuffle), and the chunk POSTs themselves
+  *     (`deliverChunksDistributed`), one delivery range per input partition;
   *   - DRIVER (serial, protocol-imposed): only the ordered commit token —
   *     one contiguous chunk range in flight at a time, progress persisted
   *     after ACK (A21); payload bytes never cross the driver.
@@ -65,24 +67,18 @@ object IngestionPipeline {
   def withInputOrderRn(df: DataFrame): DataFrame =
     ChunkAssigner.withInputOrderRowNumber(df)
 
-  /** Distributed chunk construction: returns (chunkNumber, nRecords,
-    * orderedCanonicalRecords, checksum) — one row per chunk, built with
-    * map-side parallelism and a single groupBy shuffle. Numbering starts at
+  /** Chunk construction: (chunk_number, n_records, records, checksum), one
+    * row per chunk, each row of `df` one canonical record, in input order.
+    * Every input partition folds its own rows in order, with no shuffle
+    * (`ChunkAssigner.chunks`), so the output partitions are the input
+    * partitions as contiguous ascending chunk ranges. Numbering starts at
     * `lastChunk + 1` (streaming batches continue a running sequence). */
   def buildChunks(df: DataFrame, request: IngestRequest,
-      lastChunk: Long = -1L): DataFrame = {
-    val withRec = withInputOrderRn(df)
-      .withColumn("rec", CanonicalJson(struct(df.columns.map(col): _*)))
-    ChunkAssigner.aggregateChunks(request.chunkSizeByRecords match {
-      case Some(n) =>
-        withRec.withColumn("chunk_number", ChunkAssigner.countChunkNumber(n, lastChunk))
-      case None =>
-        // A10/A13: byte-budget greedy packing over serialized record sizes
-        ChunkAssigner.assignByBytes(
-          withRec, Seq(col("rn")), request.chunkSizeByMemory.get,
-          octet_length(col("rec")).cast("long"), lastChunk = lastChunk)
-    })
-  }
+      lastChunk: Long = -1L): DataFrame =
+    ChunkAssigner.chunks(df, request.chunkSizeByRecords match {
+      case Some(n) => ChunkAssigner.ChunkBound.Records(n)
+      case None => ChunkAssigner.ChunkBound.Bytes(request.chunkSizeByMemory.get) // A10/A13
+    }, lastChunk)
 
   /** The id a batch ingestion of `request` runs and persists under — the
     * one derivation both [[run]] and the API controller use. */
@@ -102,7 +98,7 @@ object IngestionPipeline {
   /** The one delivery step of a batch run and of every streaming
     * micro-batch: build `source`'s chunks numbered from `lastChunk + 1`,
     * cached so the `maxChunk` job and the per-partition delivery jobs do not
-    * re-run the parse/canonicalize/shuffle DAG, then deliver every chunk
+    * re-run the parse and the fold, then deliver every chunk
     * after the last ACK. A `closed` source is a whole input: its highest
     * chunk carries is_last and the run ends with [[complete]]. An open
     * stream has no last chunk (-2: no chunk number can equal it). */
@@ -143,26 +139,28 @@ object IngestionPipeline {
     * POST from executor tasks, never crossing the driver — at scale the
     * driver NIC is no longer the funnel and no chunk batch can OOM it.
     *
-    * Ordering (A24) is preserved by a driver-held commit token: pending
-    * chunks are range-partitioned into contiguous chunk_number ranges, and
-    * the driver runs ONE partition's task at a time, in range order; within
-    * a task chunks POST in sorted order. The driver receives only
+    * Ordering (A24) is preserved by a driver-held commit token: `chunks`'
+    * partitions are contiguous ascending chunk_number ranges, one per input
+    * partition ([[buildChunks]]), and the driver runs ONE partition's task at
+    * a time, in partition order; within a task chunks POST in order, and a
+    * chunk number not above the one before it fails the task before its
+    * POST. The driver receives only
     * (chunk_number, n_records) ACK summaries and a count of the chunks it
     * skipped as already ACKed (A20), and persists progress (A21) between
     * tasks. A failing chunk aborts the token advance; the ACKs its
     * task already won are persisted first, so terminal state still points at
-    * the exact last ACKed chunk. A hard crash can lose at most one task's
-    * ACK summaries — those chunks re-send on resume and the receiver's
-    * chunk_id idempotency (A23) absorbs them: at-least-once per chunk,
-    * exactly the reference's contract. */
+    * the exact last ACKed chunk. A hard crash can lose at most one delivery
+    * range's ACK summaries, a range being one input partition's chunks —
+    * those chunks re-send on resume and the receiver's chunk_id idempotency
+    * (A23) absorbs them: at-least-once per chunk, exactly the reference's
+    * contract. */
   def deliverChunksDistributed(chunks: DataFrame, ingestionId: String,
       store: IngestionStateStore, callbackUrl: String, lastAcked: Long,
       startingTotal: Long, maxChunk: Long): (Long, Long, Long) = {
     val sc = chunks.sparkSession.sparkContext
     // every cached chunk, read as InternalRow: a chunk at or below the last
     // ACK (A20) costs its task one long read, not an external-Row
-    // conversion of its records. buildChunks ends with orderBy(chunk_number),
-    // so the partitions are contiguous ascending ranges, in order
+    // conversion of its records
     val rdd = GraftSql.toInternalRdd(chunks)
     val Seq(iChunk, iN, iRecords, iChecksum) =
       Seq("chunk_number", "n_records", "records", "checksum").map(chunks.schema.fieldIndex)
@@ -178,6 +176,7 @@ object IngestionPipeline {
       val builder = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
         val t = new Thread(r, "chunk-body-builder"); t.setDaemon(true); t
       })
+      var previous = Long.MinValue
       // the scan may reuse its row on the next it.next(): every field the
       // helper thread reads is copied out here, on the task thread
       def buildNext(): Option[(Long, Long, java.util.concurrent.Future[String])] = {
@@ -185,6 +184,10 @@ object IngestionPipeline {
         while (next.isEmpty && it.hasNext) {
           val row = it.next()
           val chunkNumber = row.getLong(iChunk)
+          if (chunkNumber <= previous) throw new IllegalStateException(
+            s"chunk $chunkNumber follows chunk $previous in one delivery range: " +
+              "a range must hold ascending chunk numbers")
+          previous = chunkNumber
           if (chunkNumber <= lastAcked) skipped += 1
           else {
             val records = row.getArray(iRecords).copy()
@@ -200,34 +203,32 @@ object IngestionPipeline {
       }
       try {
         var pending = buildNext()
-        while (pending.isDefined && error.isEmpty) {
+        while (pending.isDefined) {
           val (chunkNumber, n, bodyFut) = pending.get
-          try {
-            val body = bodyFut.get()
-            pending = buildNext() // overlaps with this chunk's POST + ACK wait
-            sink.sendWithRetry(body, s"chunk $chunkNumber")
-            acks += ((chunkNumber, n))
-          } catch {
-            // task-kill / cancellation signals and fatal JVM errors keep
-            // their scheduler semantics — only orderly delivery failures
-            // become a driver-visible error string
-            case e: org.apache.spark.TaskKilledException => throw e
-            case e: InterruptedException => throw e
-            // surface the terminal error to the driver WITH the task's won
-            // ACKs — a thrown task would discard them and leave state stale.
-            // Message-less exceptions (NPE etc.) still need a diagnosable
-            // string; the class name rides along for those.
-            case scala.util.control.NonFatal(e) =>
-              val cause = e match {
-                case ee: java.util.concurrent.ExecutionException
-                  if ee.getCause != null => ee.getCause
-                case _ => e
-              }
-              error = Some(
-                if (cause.getMessage == null) cause.getClass.getName
-                else s"${cause.getMessage} (${cause.getClass.getSimpleName})")
-          }
+          val body = bodyFut.get()
+          pending = buildNext() // overlaps with this chunk's POST + ACK wait
+          sink.sendWithRetry(body, s"chunk $chunkNumber")
+          acks += ((chunkNumber, n))
         }
+      } catch {
+        // task-kill / cancellation signals and fatal JVM errors keep
+        // their scheduler semantics — only orderly delivery failures
+        // become a driver-visible error string
+        case e: org.apache.spark.TaskKilledException => throw e
+        case e: InterruptedException => throw e
+        // surface the terminal error to the driver WITH the task's won
+        // ACKs — a thrown task would discard them and leave state stale.
+        // Message-less exceptions (NPE etc.) still need a diagnosable
+        // string; the class name rides along for those.
+        case scala.util.control.NonFatal(e) =>
+          val cause = e match {
+            case ee: java.util.concurrent.ExecutionException
+              if ee.getCause != null => ee.getCause
+            case _ => e
+          }
+          error = Some(
+            if (cause.getMessage == null) cause.getClass.getName
+            else s"${cause.getMessage} (${cause.getClass.getSimpleName})")
       } finally builder.shutdownNow()
       Delivered(acks.toSeq, skipped, error)
     }

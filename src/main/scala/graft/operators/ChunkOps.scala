@@ -35,16 +35,14 @@ object ChunkOps {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   // -- B28: per-chunk canonical checksum (A14/A15) ---------------------------
-  // Records are canonical-JSON'd by the native expression, then checksummed
-  // by the ingestion path's own per-chunk aggregate.
+  // Records in the total order, range-partitioned, are chunked, rendered and
+  // checksummed by the ingestion path's own ordered fold.
   private def q28(s: SparkSession, dir: String): DataFrame = {
-    val chunked = ChunkAssigner.assignByCount(
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-          col("l_suppkey"), col("l_returnflag")),
-      Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")), 200)
-    ChunkAssigner.aggregateChunks(chunked.withColumn("rec", CanonicalJson(struct(
-        col("l_linenumber"), col("l_orderkey"), col("l_returnflag")))))
+    val keys = Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+    val ordered = Tables.lineitem(s, dir)
+      .repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
+      .select(col("l_linenumber"), col("l_orderkey"), col("l_returnflag"))
+    ChunkAssigner.chunks(ordered, ChunkAssigner.ChunkBound.Records(200), lastChunk = -1L)
       .select("chunk_number", "n_records", "checksum")
   }
 

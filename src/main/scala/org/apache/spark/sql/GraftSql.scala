@@ -86,7 +86,18 @@ object GraftSql {
     require(plan.isInstanceOf[execution.LogicalRDD],
       s"releaseCheckpointBlocks takes a checkpoint itself, not a frame " +
         s"derived from one:\n$plan")
-    plan.asInstanceOf[execution.LogicalRDD].rdd.unpersist(blocking = false)
+    dropBlocks(plan.asInstanceOf[execution.LogicalRDD].rdd)
+  }
+
+  /** Drops `rdd`'s storage blocks without waiting, like
+    * `RDD.unpersist(blocking = false)`, but without the WARN that call logs
+    * for every locally checkpointed RDD ("cannot be recomputed after
+    * unpersisting"): releasing a checkpoint nothing will re-read is what the
+    * release sweeps do by design. */
+  def dropBlocks(rdd: org.apache.spark.rdd.RDD[_]): Unit = rdd.checkpointData match {
+    case Some(_: org.apache.spark.rdd.LocalRDDCheckpointData[_]) =>
+      rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+    case _ => rdd.unpersist(blocking = false)
   }
 
   /** Ids of the persisted RDDs behind a checkpointed Dataset's LogicalRDD

@@ -1,6 +1,10 @@
 package graft.chunk
 
 import graft.TestSpark
+import graft.api.IngestRequest
+import graft.ingest.IngestionPipeline
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -149,5 +153,93 @@ class ChunkingLawsSpec extends AnyFunSuite {
     out.collect()
     assert(out.rdd.getNumPartitions > 1,
       "prefix sum collapsed the frame to one partition")
+  }
+
+  // -- ingestion chunks over laid-out input partitions (A9/A10/A15) ----------
+
+  /** A frame of `(id, pad)` rows whose partition p holds exactly `sizes(p)`
+    * rows, ids ascending across partitions, and each row's canonical record
+    * as the reference writes it by hand. */
+  private def laidOut(sizes: Seq[Int], rnd: scala.util.Random): (DataFrame, Seq[String]) = {
+    val offsets = sizes.scanLeft(0)(_ + _)
+    val pads = IndexedSeq.fill(sizes.sum)(rnd.alphanumeric.take(1 + rnd.nextInt(30)).mkString)
+    val rows = spark.sparkContext.parallelize(sizes.indices, sizes.size)
+      .mapPartitionsWithIndex((p, _) =>
+        (offsets(p) until offsets(p + 1)).iterator.map(i => (i.toLong, pads(i))))
+    (rows.toDF("id", "pad"), pads.indices.map(i => s"""{"id":$i,"pad":"${pads(i)}"}"""))
+  }
+
+  private def sha256Hex(s: String): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes(UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** The driver-side reference fold: group by count (`Left(n)`) or by
+    * greedy bytes (`Right(budget)`, flush before an append that would pass
+    * the budget), number from `lastChunk + 1`, hash `[` ‖ records ‖ `]`. */
+  private def referenceChunks(recs: Seq[String], bound: Either[Int, Long],
+      lastChunk: Long): Seq[(Long, Long, Seq[String], String)] = {
+    val groups: Seq[Seq[String]] = bound match {
+      case Left(n) => recs.grouped(n).toSeq
+      case Right(budget) =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
+        var bytes = 0L
+        recs.foreach { r =>
+          val sz = r.getBytes(UTF_8).length
+          if (out.isEmpty || bytes + sz > budget) { out += Vector.empty; bytes = 0L }
+          out(out.size - 1) = out.last :+ r
+          bytes += sz
+        }
+        out.toSeq
+    }
+    groups.zipWithIndex.map { case (g, i) =>
+      (lastChunk + 1 + i, g.size.toLong, g, sha256Hex(g.mkString("[", ",", "]")))
+    }
+  }
+
+  /** `buildChunks` over `sizes` equals the reference fold, and its output
+    * partitions are contiguous ascending chunk ranges, in partition order. */
+  private def assertChunksMatch(sizes: Seq[Int], bound: Either[Int, Long],
+      lastChunk: Long, rnd: scala.util.Random): Unit = {
+    val (df, recs) = laidOut(sizes, rnd)
+    val request = IngestRequest("laid-out", "json", "http://localhost:1/unused",
+      chunkSizeByRecords = bound.left.toOption, chunkSizeByMemory = bound.toOption)
+    val chunks = IngestionPipeline.buildChunks(df, request, lastChunk)
+    val clue = s"sizes $sizes, bound $bound, lastChunk $lastChunk"
+    val got = chunks.collect().map(r => (r.getLong(0), r.getLong(1),
+      r.getSeq[String](2), r.getString(3))).toSeq
+    assert(got == referenceChunks(recs, bound, lastChunk), clue)
+    val parts = chunks.rdd.map(_.getLong(0)).glom().collect().map(_.toSeq).toSeq
+    assert(parts.flatten == got.map(_._1), s"partitions out of order: $parts; $clue")
+  }
+
+  private val layouts = Seq(
+    Seq(23),                     // one partition
+    Seq(7, 0, 13, 0, 0, 9),      // empty partitions, mid-chunk ends
+    Seq(5, 3, 4, 12),            // 3 < one chunk; chunk 0 spans p0..p2 at n=10
+    Seq(0, 0, 4),                // leading empties
+    Seq(10, 10, 10),             // partitions end on chunk boundaries
+    Seq(1, 1, 1, 1, 1, 1, 1),    // seven one-row partitions
+    Seq(0, 0))                   // no rows: no chunks
+
+  test("count chunks over laid-out partitions == the reference fold") {
+    val rnd = new scala.util.Random(41)
+    for (sizes <- layouts; n <- Seq(1, 3, 10); last <- Seq(-1L, 6L))
+      assertChunksMatch(sizes, Left(n), last, rnd)
+    for (_ <- 1 to 12) {
+      val sizes = Seq.fill(1 + rnd.nextInt(7))(if (rnd.nextInt(4) == 0) 0 else rnd.nextInt(30))
+      assertChunksMatch(sizes, Left(1 + rnd.nextInt(12)), rnd.nextInt(50) - 1L, rnd)
+    }
+  }
+
+  test("byte chunks over laid-out partitions == the greedy reference fold") {
+    val rnd = new scala.util.Random(43)
+    // records are 19-56 bytes: 25 leaves most records alone (some over the
+    // budget), 120 packs ~3, 400 packs ~10 and spans three partitions
+    for (sizes <- layouts; budget <- Seq(25L, 120L, 400L); last <- Seq(-1L, 6L))
+      assertChunksMatch(sizes, Right(budget), last, rnd)
+    for (_ <- 1 to 12) {
+      val sizes = Seq.fill(1 + rnd.nextInt(7))(if (rnd.nextInt(4) == 0) 0 else rnd.nextInt(30))
+      assertChunksMatch(sizes, Right(20L + rnd.nextInt(400)), rnd.nextInt(50) - 1L, rnd)
+    }
   }
 }

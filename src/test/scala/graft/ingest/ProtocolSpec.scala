@@ -108,14 +108,15 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("resume skips already-ACKed chunks across delivery partitions (A20)") {
     val receiver = new RecordingPimCore
     try {
-      // ~24 KB incompressible records: ~5 MB of shuffled chunks, enough that
-      // AQE keeps the chunk sort's range partitions apart instead of
-      // coalescing them into one
+      // a delivery range is an input partition: four JSON files of 50
+      // ~24 KB records each scan as four partitions of five chunks
       val rnd = new scala.util.Random(7)
-      val f = Files.createTempFile("graft_resume", ".json")
-      Files.writeString(f, (0 until 200).map { i =>
-        s"""{"id": $i, "pad": "${rnd.alphanumeric.take(24000).mkString}"}"""
-      }.mkString("[\n", ",\n", "\n]"))
+      val f = Files.createTempDirectory("graft_resume")
+      (0 until 4).foreach { file =>
+        Files.writeString(f.resolve(s"part$file.json"), (50 * file until 50 * file + 50).map { i =>
+          s"""{"id": $i, "pad": "${rnd.alphanumeric.take(24000).mkString}"}"""
+        }.mkString("[\n", ",\n", "\n]"))
+      }
       val req = IngestRequest(f.toString, "json", receiver.url,
         chunkSizeByRecords = Some(10))
       // the 12 chunks to skip span more than one delivery partition
@@ -139,6 +140,29 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
       val resumed = receiver.posts(id).drop(firstRun)
       assert(resumed.map(_.chunkNumber) == (12L until 20L))
       assert(resumed.forall(_.ack))
+    } finally receiver.stop()
+  }
+
+  test("a delivery range out of chunk order fails before its POST (A24)") {
+    val receiver = new RecordingPimCore
+    try {
+      val file = freshFile()
+      val req = IngestRequest(file, "json", receiver.url, chunkSizeByRecords = Some(10))
+      val chunks = IngestionPipeline.buildChunks(IngestionPipeline.scan(spark, req), req)
+      val byNumber = chunks.collect().map(r => r.getAs[Long]("chunk_number") -> r).toMap
+      // one delivery range holding chunks 0, 1, 3, 2, 4
+      val misordered = spark.createDataFrame(spark.sparkContext.parallelize(
+        Seq(0L, 1L, 3L, 2L, 4L).map(byNumber), 1), chunks.schema)
+      val id = resumeId(file)
+      val store = IngestionStateStore.inMemory()
+      val ex = intercept[RuntimeException] {
+        IngestionPipeline.deliverChunksDistributed(misordered, id, store,
+          receiver.url, lastAcked = -1L, startingTotal = 0L, maxChunk = 4L)
+      }
+      assert(ex.getMessage.contains("chunk 2 follows chunk 3"), ex.getMessage)
+      // chunks 0 and 1 went out and were ACKed; nothing out of order was POSTed
+      assert(receiver.posts(id).map(p => (p.chunkNumber, p.ack)) == Seq((0L, true), (1L, true)))
+      assert(store.lastChunk(id) == 1L && store.totalRecords(id) == 20L)
     } finally receiver.stop()
   }
 
