@@ -1,6 +1,7 @@
 package graft.api
 
 import graft.canon.Identity
+import graft.chunk.ChunkAssigner.ChunkBound
 import graft.ingest.FileType
 
 /** Ingestion request (SURVEY.md §2 A29 — `app/schemas/request_model.py:18-66`).
@@ -24,10 +25,9 @@ final case class IngestRequest(
   val kind: FileType = FileType.parse(fileType) // any case: JSON = json
   require(chunkSizeByRecords.isDefined ^ chunkSizeByMemory.isDefined,
     "exactly one of chunk_size_by_records and chunk_size_by_memory must be provided")
-  chunkSizeByRecords.foreach(n =>
-    require(n >= 1 && n <= 4000, s"chunk_size_by_records must be in [1, 4000], got $n"))
-  chunkSizeByMemory.foreach(b =>
-    require(b >= 1, s"chunk_size_by_memory must be positive, got $b"))
+  /** The chunk bound, checked on construction (A9/A10/A13). */
+  val bound: ChunkBound = chunkSizeByRecords.map(ChunkBound.Records(_))
+    .getOrElse(ChunkBound.Bytes(chunkSizeByMemory.get))
 
   /** The file identity batch runs and streams derive their ingestion ids
     * from — over the parsed type, so a JSON run resumes a json one rather

@@ -1,6 +1,7 @@
 package graft.chunk
 
 import graft.canon.CanonicalJson
+import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 import org.apache.commons.codec.binary.Hex
 import org.apache.spark.{Dependency, NarrowDependency, Partition, TaskContext}
@@ -8,9 +9,8 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftSql}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Chunk assignment (SURVEY.md §2 A9–A11): map an ordered record stream onto
@@ -75,10 +75,11 @@ object ChunkAssigner {
 
   /** A12/A14/A15 in one ordered pass: the chunks of `ordered`, whose
     * partitions hold its records in order, as `(chunk_number, n_records,
-    * records, checksum)` rows numbered from `lastChunk + 1`. Each row of
+    * payload, checksum)` rows numbered from `lastChunk + 1`. Each row of
     * `ordered` is one record, rendered as the canonical JSON object of its
-    * columns; `checksum` is sha256 of `[` ‖ records joined by `,` ‖ `]`,
-    * hashed as the fold goes, with no joined string.
+    * columns; `payload` is the UTF-8 bytes of `[` ‖ records joined by `,` ‖
+    * `]` — the chunk's `records` array exactly as it goes on the wire (A17)
+    * — and `checksum` is the sha256 of exactly those bytes (A15).
     *
     * Output partition p holds the chunks whose first record is in input
     * partition p: contiguous ascending chunk ranges in partition order, with
@@ -91,25 +92,17 @@ object ChunkAssigner {
   def chunks(ordered: DataFrame, bound: ChunkBound, lastChunk: Long): DataFrame = {
     val rows = GraftSql.toInternalRdd(ordered)
     val schema = ordered.schema
-    val sc = rows.sparkContext
     val heads = 0 until rows.getNumPartitions - 1 // the last carry is unused
     val carries = (bound match {
       case ChunkBound.Records(n) =>
         val counts = if (heads.isEmpty) Array.empty[Long]
-          else sc.runJob(rows, (it: Iterator[InternalRow]) => {
+          else rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
             var k = 0L
             while (it.hasNext) { it.next(); k += 1 }
             k
           }, heads)
         counts.toIndexedSeq.scanLeft(0L)(_ + _).map(seen => Carry(seen, 0L, (seen + n - 1) / n))
-      case ChunkBound.Bytes(_) =>
-        heads.scanLeft(Carry(0L, 0L, 0L)) { (in, p) =>
-          sc.runJob(rows, (it: Iterator[InternalRow]) => {
-            val fold = new Packing(bound, in)
-            it.foreach(r => fold.add(render(r, schema).numBytes))
-            fold.carry
-          }, Seq(p)).head
-        }
+      case ChunkBound.Bytes(_) => carriesBySize(rows, bound)(render(_, schema).length)
     }).take(rows.getNumPartitions)
     GraftSql.internalCreateDataFrame(ordered.sparkSession,
       new ChunkFoldRDD(rows, schema, bound, lastChunk, carries), ChunkSchema)
@@ -124,13 +117,15 @@ object ChunkAssigner {
       require(n >= 1 && n <= 4000,
         s"chunk_size_by_records must be in [1, 4000], got $n") // request_model.py:22
     }
-    final case class Bytes(budget: Long) extends ChunkBound
+    final case class Bytes(budget: Long) extends ChunkBound {
+      require(budget >= 1, s"chunk_size_by_memory must be positive, got $budget")
+    }
   }
 
   private val ChunkSchema: StructType = StructType(Seq(
     StructField("chunk_number", LongType, nullable = false),
     StructField("n_records", LongType, nullable = false),
-    StructField("records", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("payload", BinaryType, nullable = false),
     StructField("checksum", StringType, nullable = false)))
 
   /** The packing fold's state entering a record: records seen, bytes in the
@@ -158,29 +153,45 @@ object ChunkAssigner {
     def carry: Carry = Carry(rows, bytes, chunks)
   }
 
-  private def render(row: InternalRow, schema: StructType): UTF8String = {
+  /** The packing fold's state entering each partition of `rows`: a chain of
+    * one-partition jobs, each folding its partition's record sizes from the
+    * carry the job before it returned. The last partition's own fold is not
+    * run: no partition follows it. */
+  private def carriesBySize(rows: RDD[InternalRow], bound: ChunkBound)(
+      size: InternalRow => Long): IndexedSeq[Carry] =
+    (0 until rows.getNumPartitions - 1).scanLeft(Carry(0L, 0L, 0L)) { (in, p) =>
+      rows.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+        val fold = new Packing(bound, in)
+        it.foreach(r => fold.add(size(r)))
+        fold.carry
+      }, Seq(p)).head
+    }
+
+  private def render(row: InternalRow, schema: StructType): Array[Byte] = {
     val sb = new java.lang.StringBuilder(64)
     CanonicalJson.write(sb, row, schema)
-    UTF8String.fromString(sb.toString)
+    sb.toString.getBytes(StandardCharsets.UTF_8)
   }
 
-  /** One chunk as it fills: its records and their running sha256. */
+  /** One chunk as it fills: its payload `[r1,…,rn]`, then the sha256 of
+    * that payload. */
   private final class ChunkBuilder(number: Long) {
-    private val digest = MessageDigest.getInstance("SHA-256")
-    private val records = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
-    digest.update('['.toByte)
+    private val payload = new java.io.ByteArrayOutputStream(1024)
+    private var n = 0L
+    payload.write('[')
 
-    def add(rec: UTF8String): Unit = {
-      if (records.nonEmpty) digest.update(','.toByte)
-      digest.update(rec.getBytes)
-      records += rec
+    def add(rec: Array[Byte]): Unit = {
+      if (n > 0) payload.write(',')
+      payload.write(rec, 0, rec.length)
+      n += 1
     }
 
     def result(): InternalRow = {
-      digest.update(']'.toByte)
-      new GenericInternalRow(Array[Any](number, records.size.toLong,
-        new GenericArrayData(records.toArray[Any]),
-        UTF8String.fromString(Hex.encodeHexString(digest.digest()))))
+      payload.write(']')
+      val bytes = payload.toByteArray
+      val checksum = MessageDigest.getInstance("SHA-256").digest(bytes)
+      new GenericInternalRow(Array[Any](number, n, bytes,
+        UTF8String.fromString(Hex.encodeHexString(checksum))))
     }
   }
 
@@ -224,7 +235,7 @@ object ChunkAssigner {
         private def advance(): InternalRow = {
           while (own.hasNext) {
             val rec = render(own.next(), schema)
-            if (packing.add(rec.numBytes)) {
+            if (packing.add(rec.length)) {
               val done = open
               open = new ChunkBuilder(lastChunk + packing.chunks)
               open.add(rec)
@@ -235,7 +246,7 @@ object ChunkAssigner {
           var closed = false
           while (!closed && ahead.hasNext) {
             val rec = render(ahead.next(), schema)
-            closed = packing.add(rec.numBytes)
+            closed = packing.add(rec.length)
             if (!closed) open.add(rec)
           }
           val done = open
@@ -293,61 +304,35 @@ object ChunkAssigner {
     }).drop("__psz")
   }
 
-  /** A10: byte-budget chunking — greedy packing where adding a record may
-    * never exceed `budgetBytes` (`json_reader.py:133`: flush BEFORE append
-    * when chunk_bytes + next_bytes > budget). Greedy packing is inherently
-    * sequential in record order — but only over the SIZES, not the payloads.
+  /** A10: byte-budget chunking in `orderCols` order — greedy packing where
+    * adding a record may never exceed `budgetBytes` (`json_reader.py:133`:
+    * flush BEFORE append when chunk_bytes + next_bytes > budget), appended
+    * as `chunk_number` from `lastChunk + 1`. `sizeCol` must be non-null.
     *
-    * Scale shape: row numbers are assigned distributed (`withRowNumber` —
-    * range partition + per-partition index, payloads stay put); the greedy
-    * fold runs over a projected `(rn, size)` stream (~16 bytes/row) as K
-    * CHAINED MINI-JOBS — one per partition of the range-partitioned pair
-    * stream, each folding its slice where the shuffle block lives and
-    * handing a single [[Carry]] to the next ([[chunks]]' byte mode runs the
-    * same chain over its input partitions). Partition
-    * p's rns all precede partition p+1's (rn came from zipWithIndex over
-    * these same partitions), so the chained fold IS the global fold; no
-    * stage ever runs one task over N rows and no N-row shuffle block exists.
-    * The emitted chunk-start row numbers broadcast back and every payload
-    * partition assigns `chunk_number` locally via a codegen'd binary search
-    * (`SortedBoundaryRank`). Driver/broadcast footprint is one long per
-    * chunk; serial dependency is K carry handoffs, not N rows.
+    * Greedy packing is sequential in record order, but only over the sizes:
+    * the rows are range-partitioned and sorted once, the fold state entering
+    * each partition comes from the same chain of one-partition jobs as
+    * [[chunks]]' byte mode, and each partition then re-folds its own rows
+    * from that carry. Payloads stay in their partitions; the driver holds
+    * one [[Carry]] per partition. One RDD instance serves every job, so all
+    * of them see the same range boundaries and share one shuffle.
     */
   def assignByBytes(df: DataFrame, orderCols: Seq[Column], budgetBytes: Long,
       sizeCol: Column, lastChunk: Long = -1L): DataFrame = {
-    // "__rn", not "rn": ingestion callers pass frames that already carry an
-    // input-order `rn` (which is itself the order key)
-    val withRn = withRowNumber(df.withColumn("__size", sizeCol), orderCols,
-      rnName = "__rn")
-    // (rn, size) pairs only; partitions are rn-contiguous and rn-sorted by
-    // construction. The fold's output is the set of row numbers that START
-    // a new chunk (first row never does).
-    val pairs = withRn.select(col("__rn"), col("__size").cast("long"))
-      .rdd.map(r => (r.getLong(0), r.getLong(1)))
-    val sc = df.sparkSession.sparkContext
     val bound = ChunkBound.Bytes(budgetBytes)
-    val startsBuf = scala.collection.mutable.ArrayBuffer.empty[Long]
-    var carry = Carry(0L, 0L, 0L) // the fold state entering the next slice
-    for (p <- 0 until pairs.getNumPartitions) {
-      val in = carry
-      val Array((pStarts, out)) = sc.runJob(pairs,
-        (it: Iterator[(Long, Long)]) => {
-          val fold = new Packing(bound, in)
-          val ps = scala.collection.mutable.ArrayBuffer.empty[Long]
-          it.foreach { case (rn, sz) => if (fold.add(sz) && fold.chunks > 1) ps += rn }
-          (ps.toArray, fold.carry)
-        }, Seq(p))
-      startsBuf ++= pStarts
-      carry = out
-    }
-    val boundaries: Array[Long] = startsBuf.toArray
-    // chunk_number = base + (# chunk-start rns <= rn): distributed, local to
-    // each payload partition (withRn is one materialized RDD — both the fold
-    // job above and this assignment reuse its shuffle files, so row numbers
-    // are identical across the two jobs)
-    withRn
-      .withColumn("chunk_number",
-        lit(lastChunk + 1) + graft.functions.SortedBoundaryRank.of(col("__rn"), boundaries))
-      .drop("__size", "__rn")
+    val sorted = df.withColumn("__size", sizeCol.cast("long"))
+      .repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions,
+        orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+    val idx = sorted.schema.fieldIndex("__size")
+    val rows = GraftSql.toInternalRdd(sorted)
+    val carries = carriesBySize(rows, bound)(_.getLong(idx))
+    appendLong(sorted, "chunk_number", rows.mapPartitionsWithIndex { (p, it) =>
+      val packing = new Packing(bound, carries(p))
+      it.map { row =>
+        packing.add(row.getLong(idx))
+        (row, lastChunk + packing.chunks)
+      }
+    }).drop("__size")
   }
 }

@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions.col
 /** The ingestible file types (A1–A8, A28's file_type branch): the one table
   * batch scans and streaming sources both read — a reader format, its
   * options, and whether A7's empty-row filter applies. `excel` is the native
-  * SpreadsheetML source; a batch scan of pre-converted CSV input falls back
-  * to `csv` (`IngestionPipeline.scan`). */
+  * SpreadsheetML source only (A4); CSV input is `csv`. */
 sealed abstract class FileType(val name: String, val format: String,
     val options: Map[String, String], dropsEmptyRows: Boolean) {
 

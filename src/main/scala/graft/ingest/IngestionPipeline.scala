@@ -31,54 +31,29 @@ object IngestionPipeline {
   final case class Result(ingestionId: String, chunksSent: Long, chunksSkipped: Long,
       totalRecords: Long, state: Option[IngestionState])
 
-  /** Scan (A1–A8): the request's [[FileType]] reader, options and A7 filter;
-    * `excel` input that is not xlsx is pre-converted CSV with the same
-    * header semantics. */
+  /** Scan (A1–A8): the request's [[FileType]] reader, options and A7
+    * filter — the same read a streaming ingestion makes. */
   def scan(spark: SparkSession, request: IngestRequest): DataFrame = {
-    val ft = request.kind match {
-      case FileType.Excel if !looksLikeXlsx(request.filePath) => FileType.Csv
-      case t => t
-    }
+    val ft = request.kind
     ft.countedRows(spark.read.format(ft.format).options(ft.options).load(request.filePath))
   }
-
-  /** `excel` routes to the native xlsx source for a .xlsx file OR a
-    * directory holding .xlsx files (XlsxSource.expand reads one partition
-    * per file); anything else falls back to pre-converted CSV — which must
-    * never see zip bytes (it would deliver garbage records with valid
-    * checksums). Probe failures PROPAGATE — a transient FS error must fail
-    * the request, not silently demote zip bytes to the CSV parser. */
-  private def looksLikeXlsx(path: String): Boolean =
-    path.toLowerCase.endsWith(".xlsx") || {
-      // glob paths (e.g. /data/*.csv with fileType excel) fall through to
-      // the CSV reader's glob support — getFileStatus on a glob literal
-      // would throw FileNotFoundException before dispatch
-      !path.exists("*?[{".contains(_)) && {
-        val conf = graft.sources.XlsxSource.hadoopConf()
-        val p = new org.apache.hadoop.fs.Path(path)
-        val fs = org.apache.hadoop.fs.FileSystem.get(p.toUri, conf)
-        fs.getFileStatus(p).isDirectory &&
-          graft.sources.XlsxSource.expand(path, conf).nonEmpty
-      }
-    }
 
   /** Stable 0-based row number in input order (file order for file
     * sources): no sort, no single-partition funnel. */
   def withInputOrderRn(df: DataFrame): DataFrame =
     ChunkAssigner.withInputOrderRowNumber(df)
 
-  /** Chunk construction: (chunk_number, n_records, records, checksum), one
-    * row per chunk, each row of `df` one canonical record, in input order.
-    * Every input partition folds its own rows in order, with no shuffle
-    * (`ChunkAssigner.chunks`), so the output partitions are the input
-    * partitions as contiguous ascending chunk ranges. Numbering starts at
-    * `lastChunk + 1` (streaming batches continue a running sequence). */
+  /** Chunk construction: (chunk_number, n_records, payload, checksum), one
+    * row per chunk, each row of `df` one canonical record, in input order;
+    * `payload` is the chunk's records array as it goes on the wire and
+    * `checksum` its sha256. Every input partition folds its own rows in
+    * order, with no shuffle (`ChunkAssigner.chunks`), so the output
+    * partitions are the input partitions as contiguous ascending chunk
+    * ranges. Numbering starts at `lastChunk + 1` (streaming batches continue
+    * a running sequence). */
   def buildChunks(df: DataFrame, request: IngestRequest,
       lastChunk: Long = -1L): DataFrame =
-    ChunkAssigner.chunks(df, request.chunkSizeByRecords match {
-      case Some(n) => ChunkAssigner.ChunkBound.Records(n)
-      case None => ChunkAssigner.ChunkBound.Bytes(request.chunkSizeByMemory.get) // A10/A13
-    }, lastChunk)
+    ChunkAssigner.chunks(df, request.bound, lastChunk)
 
   /** The id a batch ingestion of `request` runs and persists under — the
     * one derivation both [[run]] and the API controller use. */
@@ -137,14 +112,17 @@ object IngestionPipeline {
 
   /** Executor-direct ordered delivery (the batch hot path): chunk payloads
     * POST from executor tasks, never crossing the driver — at scale the
-    * driver NIC is no longer the funnel and no chunk batch can OOM it.
+    * driver NIC is no longer the funnel and no chunk batch can OOM it. Each
+    * chunk's `payload` goes out as the body's `records` array byte for byte,
+    * so the receiver recomputes its `checksum` over exactly the bytes the
+    * fold hashed (A15/A17).
     *
     * Ordering (A24) is preserved by a driver-held commit token: `chunks`'
     * partitions are contiguous ascending chunk_number ranges, one per input
     * partition ([[buildChunks]]), and the driver runs ONE partition's task at
     * a time, in partition order; within a task chunks POST in order, and a
-    * chunk number not above the one before it fails the task before its
-    * POST. The driver receives only
+    * chunk number other than the one after the chunk before it fails the
+    * task before its POST. The driver receives only
     * (chunk_number, n_records) ACK summaries and a count of the chunks it
     * skipped as already ACKed (A20), and persists progress (A21) between
     * tasks. A failing chunk aborts the token advance; the ACKs its
@@ -160,56 +138,34 @@ object IngestionPipeline {
     val sc = chunks.sparkSession.sparkContext
     // every cached chunk, read as InternalRow: a chunk at or below the last
     // ACK (A20) costs its task one long read, not an external-Row
-    // conversion of its records
+    // conversion of its payload
     val rdd = GraftSql.toInternalRdd(chunks)
-    val Seq(iChunk, iN, iRecords, iChecksum) =
-      Seq("chunk_number", "n_records", "records", "checksum").map(chunks.schema.fieldIndex)
+    val Seq(iChunk, iN, iPayload, iChecksum) =
+      Seq("chunk_number", "n_records", "payload", "checksum").map(chunks.schema.fieldIndex)
 
     val deliverPartition = (it: Iterator[InternalRow]) => {
       val sink = new OrderedAckHttpSink(callbackUrl)
       val acks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
       var skipped = 0L
-      var error: Option[String] = None
-      // one-chunk lookahead: POSTs must stay strictly serial (A24), but body
-      // CONSTRUCTION is not order-constrained — build chunk i+1's ~MB body on
-      // a helper thread while chunk i is in flight awaiting its ACK
-      val builder = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
-        val t = new Thread(r, "chunk-body-builder"); t.setDaemon(true); t
-      })
       var previous = Long.MinValue
-      // the scan may reuse its row on the next it.next(): every field the
-      // helper thread reads is copied out here, on the task thread
-      def buildNext(): Option[(Long, Long, java.util.concurrent.Future[String])] = {
-        var next: Option[(Long, Long, java.util.concurrent.Future[String])] = None
-        while (next.isEmpty && it.hasNext) {
+      val error = try {
+        while (it.hasNext) {
           val row = it.next()
           val chunkNumber = row.getLong(iChunk)
-          if (chunkNumber <= previous) throw new IllegalStateException(
-            s"chunk $chunkNumber follows chunk $previous in one delivery range: " +
-              "a range must hold ascending chunk numbers")
+          if (previous != Long.MinValue && chunkNumber != previous + 1)
+            throw new IllegalStateException(
+              s"chunk $chunkNumber follows chunk $previous in one delivery range: " +
+                "a range must hold consecutive ascending chunk numbers")
           previous = chunkNumber
           if (chunkNumber <= lastAcked) skipped += 1
           else {
-            val records = row.getArray(iRecords).copy()
-            val checksum = row.getUTF8String(iChecksum).toString
-            next = Some((chunkNumber, row.getLong(iN), builder.submit(() =>
-              sink.chunkBody(ingestionId, chunkNumber,
-                Identity.chunkId(ingestionId, chunkNumber), checksum,
-                IndexedSeq.tabulate(records.numElements)(records.getUTF8String(_).toString),
-                isLast = chunkNumber == maxChunk))))
+            sink.sendChunk(ingestionId, chunkNumber, Identity.chunkId(ingestionId, chunkNumber),
+              row.getUTF8String(iChecksum).toString, row.getBinary(iPayload),
+              isLast = chunkNumber == maxChunk)
+            acks += ((chunkNumber, row.getLong(iN)))
           }
         }
-        next
-      }
-      try {
-        var pending = buildNext()
-        while (pending.isDefined) {
-          val (chunkNumber, n, bodyFut) = pending.get
-          val body = bodyFut.get()
-          pending = buildNext() // overlaps with this chunk's POST + ACK wait
-          sink.sendWithRetry(body, s"chunk $chunkNumber")
-          acks += ((chunkNumber, n))
-        }
+        None
       } catch {
         // task-kill / cancellation signals and fatal JVM errors keep
         // their scheduler semantics — only orderly delivery failures
@@ -221,15 +177,9 @@ object IngestionPipeline {
         // Message-less exceptions (NPE etc.) still need a diagnosable
         // string; the class name rides along for those.
         case scala.util.control.NonFatal(e) =>
-          val cause = e match {
-            case ee: java.util.concurrent.ExecutionException
-              if ee.getCause != null => ee.getCause
-            case _ => e
-          }
-          error = Some(
-            if (cause.getMessage == null) cause.getClass.getName
-            else s"${cause.getMessage} (${cause.getClass.getSimpleName})")
-      } finally builder.shutdownNow()
+          Some(if (e.getMessage == null) e.getClass.getName
+            else s"${e.getMessage} (${e.getClass.getSimpleName})")
+      }
       Delivered(acks.toSeq, skipped, error)
     }
 

@@ -24,7 +24,8 @@ final class OrderedAckHttpSink(
 
   final case class AckError(message: String) extends RuntimeException(message)
 
-  /** One buffered HttpURLConnection POST. Buffered, not fixed-length
+  /** One buffered HttpURLConnection POST of `body`'s parts, written to the
+    * connection in order, unchanged. Buffered, not fixed-length
     * streaming: on a reused keep-alive loopback connection, streaming mode
     * adds a flat ~1.5 ms of client-side latency to every POST. Measured
     * against the mock receiver, serial ACK-checked POSTs, streaming →
@@ -39,8 +40,7 @@ final class OrderedAckHttpSink(
     * JVM-wide keep-alive cache reuses the receiver connection across
     * successive sink instances — i.e. across the commit loop's
     * per-partition tasks — with zero shared-client plumbing. */
-  private def post(body: String): String = {
-    val bytes = body.getBytes(StandardCharsets.UTF_8)
+  private def post(body: Seq[Array[Byte]]): String = {
     val conn = URI.create(callbackUrl).toURL.openConnection()
       .asInstanceOf[java.net.HttpURLConnection]
     conn.setRequestMethod("POST")
@@ -49,14 +49,14 @@ final class OrderedAckHttpSink(
     conn.setReadTimeout(timeout.toMillis.toInt)
     conn.setRequestProperty("Content-Type", "application/json")
     val os = conn.getOutputStream
-    try { os.write(bytes); os.flush() } finally os.close()
+    try { body.foreach(b => os.write(b)); os.flush() } finally os.close()
     val is = if (conn.getResponseCode >= 400 && conn.getErrorStream != null)
       conn.getErrorStream else conn.getInputStream
     try new String(is.readAllBytes(), StandardCharsets.UTF_8) finally is.close()
   }
 
   /** POST once and require `ack == true`; returns the receiver error on NACK. */
-  private def postExpectAck(body: String): Either[String, Unit] = {
+  private def postExpectAck(body: Seq[Array[Byte]]): Either[String, Unit] = {
     val respBody = post(body)
     MiniJson.parse(respBody) match {
       case o: MiniJson.JObj if o.get("ack").contains(MiniJson.JBool(true)) => Right(())
@@ -74,7 +74,7 @@ final class OrderedAckHttpSink(
     * attempts are followed by the pauses of
     * [[OrderedAckHttpSink.RetryPausesMs]] (its last entry repeats), so a
     * restarting receiver does not burn every attempt at once. */
-  def sendWithRetry(body: String, what: String): Unit = {
+  private def sendWithRetry(what: String, body: Array[Byte]*): Unit = {
     var attempt = 0
     var lastError: String = ""
     while (attempt < maxAttempts) {
@@ -95,46 +95,28 @@ final class OrderedAckHttpSink(
     throw AckError(s"$what: $lastError") // unreachable
   }
 
-  /** A17: chunk payload body. Records arrive pre-serialized in canonical
-    * JSON; the payload embeds them verbatim so the receiver's independent
-    * recompute sees exactly the bytes the checksum covers. Split from the
-    * POST so the delivery loop can build chunk i+1's body while chunk i is
-    * in flight (construction is not order-constrained; only POSTs are). */
-  def chunkBody(ingestionId: String, chunkNumber: Long, chunkId: String,
-      checksum: String, canonicalRecords: Seq[String], isLast: Boolean): String = {
-    var payloadLen = 2 + canonicalRecords.length // brackets + commas
-    canonicalRecords.foreach(payloadLen += _.length)
-    val body = new java.lang.StringBuilder(payloadLen + 256)
-    body.append("{\"ingestion_id\":\"").append(ingestionId)
-      .append("\",\"chunk_number\":").append(chunkNumber)
-      .append(",\"chunk_id\":\"").append(chunkId)
-      .append("\",\"checksum\":\"").append(checksum)
-      .append("\",\"is_last\":").append(isLast)
-      .append(",\"records\":[")
-    var first = true
-    canonicalRecords.foreach { r =>
-      if (!first) body.append(',')
-      body.append(r)
-      first = false
-    }
-    body.append("]}")
-    body.toString
-  }
-
+  /** A17: one chunk. `payload` is the chunk's records array `[r1,…,rn]` in
+    * canonical JSON, UTF-8, and `checksum` the sha256 of exactly those bytes
+    * (A15); the body carries `payload` unchanged as its `records`, so the
+    * receiver's recompute sees the bytes the checksum covers. */
   def sendChunk(ingestionId: String, chunkNumber: Long, chunkId: String,
-      checksum: String, canonicalRecords: Seq[String], isLast: Boolean): Unit =
-    sendWithRetry(
-      chunkBody(ingestionId, chunkNumber, chunkId, checksum, canonicalRecords, isLast),
-      s"chunk $chunkNumber")
+      checksum: String, payload: Array[Byte], isLast: Boolean): Unit =
+    sendWithRetry(s"chunk $chunkNumber",
+      (s"""{"ingestion_id":"$ingestionId","chunk_number":$chunkNumber,""" +
+        s""""chunk_id":"$chunkId","checksum":"$checksum","is_last":$isLast,"records":""")
+        .getBytes(StandardCharsets.UTF_8),
+      payload, OrderedAckHttpSink.BodyEnd)
 
   /** A22: completion handshake. */
   def sendCompleted(ingestionId: String, lastChunkNumber: Long, totalRecords: Long): Unit =
-    sendWithRetry(
-      s"""{"ingestion_id":"$ingestionId","status":"COMPLETED","chunk_number":$lastChunkNumber,"total_records":$totalRecords}""",
-      "COMPLETED handshake")
+    sendWithRetry("COMPLETED handshake",
+      s"""{"ingestion_id":"$ingestionId","status":"COMPLETED","chunk_number":$lastChunkNumber,"total_records":$totalRecords}"""
+        .getBytes(StandardCharsets.UTF_8))
 }
 
 object OrderedAckHttpSink {
   /** Pauses before the 2nd and 3rd attempts of one POST, in ms. */
   val RetryPausesMs: IndexedSeq[Long] = IndexedSeq(100L, 400L)
+
+  private val BodyEnd = Array('}'.toByte)
 }

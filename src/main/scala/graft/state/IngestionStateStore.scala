@@ -1,8 +1,10 @@
 package graft.state
 
 import graft.api.IngestionState
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 /** Crash-safe ingestion progress store (SURVEY.md §2 A12/A21 — the Spark
   * stand-in for the reference's SQLite `ingestion_state` table,
@@ -49,7 +51,8 @@ final class InMemoryStateStore extends IngestionStateStore {
 }
 
 /** Durable store: one small file per ingestion_id, written atomically
-  * (temp + rename) so a crash mid-upsert can never corrupt progress — the
+  * (temp + fsync + rename + directory fsync) so neither a crash mid-upsert
+  * nor a power loss after it can corrupt or roll back progress — the
   * property the reference gets from SQLite's journal.
   *
   * Scale note: progress is one row per *ingestion* (not per record), written
@@ -77,12 +80,20 @@ final class FileStateStore(dir: Path) extends IngestionStateStore {
   }
 
   // each write stages in its own temp file, so two writers of one key never
-  // rename each other's half-written bytes into place
+  // rename each other's half-written bytes into place; the temp file's bytes
+  // reach the disk before the rename, and the rename before this returns
   private def replace(target: Path, content: String): Unit = {
     val tmp = Files.createTempFile(dir, s"${target.getFileName}.", ".tmp")
-    Files.write(tmp, content.getBytes(StandardCharsets.UTF_8))
+    val out = FileChannel.open(tmp, StandardOpenOption.WRITE)
+    try {
+      val buf = ByteBuffer.wrap(content.getBytes(StandardCharsets.UTF_8))
+      while (buf.hasRemaining) out.write(buf)
+      out.force(true)
+    } finally out.close()
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    val parent = FileChannel.open(dir, StandardOpenOption.READ)
+    try parent.force(true) finally parent.close()
   }
 
   private def write(id: String, s: IngestionState): Unit =

@@ -175,9 +175,10 @@ class ChunkingLawsSpec extends AnyFunSuite {
 
   /** The driver-side reference fold: group by count (`Left(n)`) or by
     * greedy bytes (`Right(budget)`, flush before an append that would pass
-    * the budget), number from `lastChunk + 1`, hash `[` ‖ records ‖ `]`. */
+    * the budget), number from `lastChunk + 1`; the payload is `[` ‖ records
+    * joined by `,` ‖ `]` and the checksum its sha256. */
   private def referenceChunks(recs: Seq[String], bound: Either[Int, Long],
-      lastChunk: Long): Seq[(Long, Long, Seq[String], String)] = {
+      lastChunk: Long): Seq[(Long, Long, Seq[Byte], String)] = {
     val groups: Seq[Seq[String]] = bound match {
       case Left(n) => recs.grouped(n).toSeq
       case Right(budget) =>
@@ -192,7 +193,8 @@ class ChunkingLawsSpec extends AnyFunSuite {
         out.toSeq
     }
     groups.zipWithIndex.map { case (g, i) =>
-      (lastChunk + 1 + i, g.size.toLong, g, sha256Hex(g.mkString("[", ",", "]")))
+      val payload = g.mkString("[", ",", "]")
+      (lastChunk + 1 + i, g.size.toLong, payload.getBytes(UTF_8).toSeq, sha256Hex(payload))
     }
   }
 
@@ -205,8 +207,9 @@ class ChunkingLawsSpec extends AnyFunSuite {
       chunkSizeByRecords = bound.left.toOption, chunkSizeByMemory = bound.toOption)
     val chunks = IngestionPipeline.buildChunks(df, request, lastChunk)
     val clue = s"sizes $sizes, bound $bound, lastChunk $lastChunk"
+    // payloads compare byte for byte: every record, its order and the grouping
     val got = chunks.collect().map(r => (r.getLong(0), r.getLong(1),
-      r.getSeq[String](2), r.getString(3))).toSeq
+      r.getAs[Array[Byte]](2).toSeq, r.getString(3))).toSeq
     assert(got == referenceChunks(recs, bound, lastChunk), clue)
     val parts = chunks.rdd.map(_.getLong(0)).glom().collect().map(_.toSeq).toSeq
     assert(parts.flatten == got.map(_._1), s"partitions out of order: $parts; $clue")

@@ -47,6 +47,10 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     IngestRequest(file, "json", url,
       chunkSizeByRecords = Some(chunkSize), reIngestion = reIngestion)
 
+  /** A chunk payload: the records array `[r1,…,rn]` as UTF-8 bytes. */
+  private def payload(records: String*): Array[Byte] =
+    records.mkString("[", ",", "]").getBytes(java.nio.charset.StandardCharsets.UTF_8)
+
   private def resumeId(file: String): String =
     Identity.ingestionId(Identity.fileId(file, "json"), "resume")
 
@@ -159,7 +163,7 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
         IngestionPipeline.deliverChunksDistributed(misordered, id, store,
           receiver.url, lastAcked = -1L, startingTotal = 0L, maxChunk = 4L)
       }
-      assert(ex.getMessage.contains("chunk 2 follows chunk 3"), ex.getMessage)
+      assert(ex.getMessage.contains("chunk 3 follows chunk 1"), ex.getMessage)
       // chunks 0 and 1 went out and were ACKed; nothing out of order was POSTed
       assert(receiver.posts(id).map(p => (p.chunkNumber, p.ack)) == Seq((0L, true), (1L, true)))
       assert(store.lastChunk(id) == 1L && store.totalRecords(id) == 20L)
@@ -173,7 +177,7 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     mock.rejectChunk(0, times = 2)
     val t0 = System.nanoTime()
     new OrderedAckHttpSink(url).sendChunk(iid, 0, Identity.chunkId(iid, 0),
-      Identity.sha256Hex(s"[$rec]"), Seq(rec), isLast = false)
+      Identity.sha256Hex(s"[$rec]"), payload(rec), isLast = false)
     assert((System.nanoTime() - t0) / 1000000L >= pauses)
     assert(mock.lastChunkPerIngestion.get(iid).contains(0L))
 
@@ -259,7 +263,7 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rec = """{"k":1}"""
     sink.sendChunk(result.ingestionId, 0,
       Identity.chunkId(result.ingestionId, 0),
-      Identity.sha256Hex(s"[$rec]"), Seq(rec), isLast = false)
+      Identity.sha256Hex(s"[$rec]"), payload(rec), isLast = false)
     assert(mock.totalRecordsReceived == total) // not reprocessed
   }
 
@@ -269,15 +273,15 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rec = """{"k":1}"""
     val good = Identity.sha256Hex(s"[$rec]")
     val ex1 = intercept[Exception] {
-      sink.sendChunk(iid, 5, Identity.chunkId(iid, 5), good, Seq(rec), false)
+      sink.sendChunk(iid, 5, Identity.chunkId(iid, 5), good, payload(rec), false)
     }
     assert(ex1.getMessage.contains(MockPimCore.OutOfOrder))
     val ex2 = intercept[Exception] {
-      sink.sendChunk(iid, 0, Identity.chunkId(iid, 0), "0" * 64, Seq(rec), false)
+      sink.sendChunk(iid, 0, Identity.chunkId(iid, 0), "0" * 64, payload(rec), false)
     }
     assert(ex2.getMessage.contains(MockPimCore.ChecksumMismatch))
     val ex3 = intercept[Exception] {
-      sink.sendChunk(iid, 0, Identity.chunkId(iid, 0), good, Seq.empty, false)
+      sink.sendChunk(iid, 0, Identity.chunkId(iid, 0), good, payload(), false)
     }
     assert(ex3.getMessage.contains(MockPimCore.EmptyChunk))
   }
@@ -416,15 +420,29 @@ class ProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(result.totalRecords == 2) // blank rows do not count toward progress
   }
 
-  test("a glob path with fileType excel reaches the CSV reader's glob support") {
+  test("a glob path reaches the CSV reader's glob support") {
     val dir = Files.createTempDirectory("graft_glob")
     Files.writeString(dir.resolve("a.csv"), "name,qty\nalpha,1\nbeta,2\n")
     Files.writeString(dir.resolve("b.csv"), "name,qty\ngamma,3\n")
     val store = IngestionStateStore.inMemory()
-    // the xlsx probe must not getFileStatus the glob literal (it would throw
-    // FileNotFoundException before dispatch); globs fall through to CSV
-    val req = IngestRequest(s"$dir/*.csv", "excel", url, chunkSizeByRecords = Some(10))
+    val req = IngestRequest(s"$dir/*.csv", "csv", url, chunkSizeByRecords = Some(10))
     val result = IngestionPipeline.run(spark, req, store)
     assert(result.totalRecords == 3)
+  }
+
+  test("excel over a directory of CSV files fails before any POST (A4)") {
+    val dir = Files.createTempDirectory("graft_csv_as_excel")
+    Files.writeString(dir.resolve("a.csv"), "name,qty\nalpha,1\nbeta,2\n")
+    val receiver = new RecordingPimCore
+    try {
+      val store = IngestionStateStore.inMemory()
+      val req = IngestRequest(dir.toString, "excel", receiver.url,
+        chunkSizeByRecords = Some(10))
+      val ex = intercept[Exception](IngestionPipeline.run(spark, req, store))
+      assert(ex.getMessage.contains("no .xlsx files under"), ex.getMessage)
+      val id = IngestionPipeline.ingestionId(req, 0L)
+      assert(receiver.posts(id).isEmpty && receiver.mock.completedCount == 0)
+      assert(store.get(id).isEmpty)
+    } finally receiver.stop()
   }
 }

@@ -4,8 +4,8 @@ import graft.canon.Identity
 
 /** Micro-bench of the receiver's per-chunk critical path (parse → canonical
   * re-render → sha256): the POST's ACK gates on this work, so it bounds
-  * protocol throughput together with the sender's body build — and of the
-  * sink's full HTTP round trip at a 25-record and a 4000-record body.
+  * protocol throughput — and of the sink's full HTTP round trip at a
+  * 25-record and a 4000-record body.
   *
   *   sbt "Test/runMain graft.receiver.ReceiverMicroBench"
   */
@@ -45,26 +45,25 @@ object ReceiverMicroBench {
       mock.handle(b)
     }
 
-    // full HTTP round trip (sender build + POST + receiver validate + ACK)
-    // at the small-chunk and the large-chunk body size: the sink's
+    // full HTTP round trip (header + payload POST + receiver validate +
+    // ACK) at the small-chunk and the large-chunk body size: the sink's
     // per-POST client overhead shows at 25 records, its upload path at 4000
     val (_, server, url) = MockPimCore.serve()
     try {
       val sink = new graft.sink.OrderedAckHttpSink(url)
       var j = 1000
       Seq(25, n).foreach { size =>
-        val recs = records.take(size)
-        val sum = Identity.sha256Hex(recs.mkString("[", ",", "]"))
-        val bytes = sink.chunkBody("rt", 0, "rt-c0", sum, recs, isLast = false).length
-        time(s"http round trip ${size}r/${bytes}B", if (size == n) 20 else 200) {
-          sink.sendChunk(s"rt$j", 0, s"rt$j-c0", sum, recs, isLast = false)
+        val chunk = records.take(size).mkString("[", ",", "]")
+        val payload = chunk.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val sum = Identity.sha256Hex(chunk)
+        time(s"http round trip ${size}r/${payload.length}B payload",
+            if (size == n) 20 else 200) {
+          sink.sendChunk(s"rt$j", 0, s"rt$j-c0", sum, payload, isLast = false)
           j += 1
         }
       }
       // isolate transport: same client, near-empty body (fixed overhead)
       time("http tiny body", 20)(sink.sendCompleted(s"rt${j - 1}", 0, n.toLong))
-      time("chunkBody build", 20)(
-        sink.chunkBody("x", 0, "y", checksum, records, isLast = false))
     } finally server.stop(0)
   }
 }
